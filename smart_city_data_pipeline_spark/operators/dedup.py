@@ -305,8 +305,9 @@ def _oversized_band_buckets(
     ``bucket_cap`` rows — one map-side-combinable aggregate whose
     result is bounded at band_rows/cap; at most ``embed_max + 1`` rows
     reach the driver (the +1 row is the 'too many to embed' signal).
-    Cached per (dataset fingerprint, cap) like :func:`_label_counts`.
-    Returns None when the set exceeds the embed budget."""
+    Cached per (dataset fingerprint, cap) in ``_BAND_OVER_CACHE``
+    (unlike :func:`_label_counts`, which runs on every call). Returns
+    None when the set exceeds the embed budget."""
     ck = None if dataset_key is None else (dataset_key, bucket_cap)
     if ck is not None and ck in _BAND_OVER_CACHE:
         return _BAND_OVER_CACHE[ck]
@@ -583,12 +584,12 @@ def embedding_neardup(
 
     The per-label counts are BOUNDED BY LABEL CARDINALITY (one row per
     label — a fixed class vocabulary, not a function of corpus size),
-    so they are collected once per process (:func:`_label_counts`) and
-    embedded as a MAP LITERAL: the guard adds no counts subplan, no
-    broadcast exchange and no join to the runtime plan (round 3
-    shuffled every embedding array a second time just to attach
-    ``cell_n`` — a 2.1× wall regression at sf0.1, and a full extra
-    pass over the fact at 100 TB). A label missing from the snapshot
+    so they are collected on every call (:func:`_label_counts`, one
+    small aggregate) and embedded as a MAP LITERAL: the guard adds no
+    counts subplan, no broadcast exchange and no join to the runtime
+    plan (round 3 shuffled every embedding array a second time just to
+    attach ``cell_n`` — a 2.1× wall regression at sf0.1, and a full
+    extra pass over the fact at 100 TB). A label missing from the snapshot
     falls back to the banded path (conservative).
 
     Because the snapshot is known at PLAN TIME, the guard also

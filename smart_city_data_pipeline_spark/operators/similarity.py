@@ -19,7 +19,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import dataset_fingerprint, spread, table
+from smart_city_data_pipeline_spark.catalog import spread, table
 from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
 from smart_city_data_pipeline_spark.functions.vector import (
     cosine,
@@ -180,19 +180,23 @@ def _train_kmeans(emb: DataFrame, k: int, iters: int):
     md5(vec_id). Assignment is argmin over |c|² − 2·q·c (exact
     integer-valued doubles; ties → lowest cell id via
     first-occurrence array_position — the SQL twin's
-    ``ORDER BY dist, cell`` row_number). Update: per-(cell, pos)
-    integer sums via posexplode — a keyed, map-side-combinable
-    aggregate; only k×dim (sum, count) pairs reach the driver, where
-    the new component is floor(s/n + 0.5) — the same IEEE double
-    division both engines evaluate on the same exact integers. Empty
-    cells keep their centroid. At 100 TB you would train on a
-    stratified sample (:func:`textops.stratified_sample` is the
-    template) — the index ASSIGNMENT pass is the full-scan part, and
-    it is one projection.
+    ``ORDER BY dist, cell`` row_number). Update: per-cell integer
+    component sums as one wide k-row aggregate (a count plus one sum
+    column per dimension) — keyed and map-side-combinable; only k×dim
+    sums reach the driver, where the new component is
+    floor(s/n + 0.5) — the same IEEE double division both engines
+    evaluate on the same exact integers. Empty cells keep their
+    centroid. A NULL embedding takes no part in training (no seed, no
+    sums), as in the oracle. At 100 TB you would train on a stratified
+    sample (:func:`textops.stratified_sample` is the template) — the
+    index ASSIGNMENT pass is the full-scan part, and it is one
+    projection.
     """
     import math
 
-    q = emb.select("vec_id", _qvec(F.col("embedding")).alias("q"))
+    q = emb.select("vec_id", _qvec(F.col("embedding")).alias("q")).filter(
+        F.col("q").isNotNull()
+    )
     seeds = q.orderBy(F.md5(F.col("vec_id").cast("string"))).limit(k).collect()
     cents = [[float(x) for x in r["q"]] for r in seeds]
     dim = len(cents[0]) if cents else 0
@@ -1691,7 +1695,7 @@ def _kmeans_oracle_sql() -> str:
                        ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell,
                    q AS cvec,
                    list_dot_product(q, q) AS c2
-            FROM (SELECT vec_id, q FROM qv
+            FROM (SELECT vec_id, q FROM qv WHERE q IS NOT NULL
                   ORDER BY md5(CAST(vec_id AS VARCHAR))
                   LIMIT {ANN_KMEANS_K})
         ),
@@ -1753,7 +1757,7 @@ def _semantic_dedup_oracle_sql() -> str:
                        ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell,
                    q AS cvec,
                    list_dot_product(q, q) AS c2
-            FROM (SELECT vec_id, q FROM qv
+            FROM (SELECT vec_id, q FROM qv WHERE q IS NOT NULL
                   ORDER BY md5(CAST(vec_id AS VARCHAR))
                   LIMIT {ANN_KMEANS_K})
         ),
@@ -1811,7 +1815,7 @@ def _ann_recall_oracle_sql() -> str:
                        ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell,
                    q AS cvec,
                    list_dot_product(q, q) AS c2
-            FROM (SELECT vec_id, q FROM qv
+            FROM (SELECT vec_id, q FROM qv WHERE q IS NOT NULL
                   ORDER BY md5(CAST(vec_id AS VARCHAR))
                   LIMIT {ANN_KMEANS_K})
         ),
@@ -2328,7 +2332,7 @@ def _cluster_label_nmi_oracle_sql() -> str:
                        ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell,
                    q AS cvec,
                    list_dot_product(q, q) AS c2
-            FROM (SELECT vec_id, q FROM qv
+            FROM (SELECT vec_id, q FROM qv WHERE q IS NOT NULL
                   ORDER BY md5(CAST(vec_id AS VARCHAR))
                   LIMIT {ANN_KMEANS_K})
         ),

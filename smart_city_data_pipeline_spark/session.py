@@ -1,9 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]``; the same configs are
-what we would ship to a 1000-executor cluster, with
-``spark.sql.shuffle.partitions`` raised proportionally to total cores
-(rule of thumb: 2-3x total executor cores; AQE coalesces the excess).
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on); the same configs are what we would ship to a
+1000-executor cluster, with ``spark.sql.shuffle.partitions`` raised
+proportionally to total cores (rule of thumb: 2-3x total executor
+cores; AQE coalesces the excess).
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "smart-city-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (

@@ -12,7 +12,8 @@
   at 1000 executors an uncompacted day of hourly JSONL is millions of
   tiny objects, and scan cost is dominated by open() calls, not bytes.
 
-Durability/remote-fs rules (both operations):
+Durability/remote-fs rules (every operation here, and the rollup
+merges in ``streaming/cont_agg.py`` and ``streaming/topk.py``):
 
 - Existence is probed through the Hadoop FileSystem API, NEVER
   ``os.path.exists`` — a driver-local probe returns False for every
@@ -21,12 +22,21 @@ Durability/remote-fs rules (both operations):
 - The new data is FULLY written to a temp sibling dir while the old
   directory is still being read (no localCheckpoint needed — source and
   destination never overlap), then swapped in with aside-rename +
-  rename (``_commit_swap``): the live dir moves to ``._old``, the temp
-  dir moves into place, ``._old`` is deleted last. A crash anywhere
-  during the write leaves the old lake untouched; a crash inside the
-  swap window leaves BOTH copies on disk and ``recover_swap`` (called
-  by every maintenance entry point before its existence probe) rolls
-  the table forward — no crash point deletes the sole copy.
+  rename (``_commit_swap``): the live dir moves to its parked copy
+  ``.<name>._old``, the temp dir moves into place, the parked copy is
+  deleted last. A crash anywhere during the write leaves the old lake
+  untouched; a crash inside the swap window leaves BOTH copies on disk
+  and ``recover_swaps`` (called by every entry point before it reads
+  or probes the lake) rolls the table forward — no crash point deletes
+  the sole copy.
+- The swapped directory may be a whole lake or ONE partition directory
+  of it (``day=2024-01-05``): the rollup merges swap only the
+  partitions a micro-batch touches. The parked copy's leading ``.``
+  hides it from Spark's partition discovery, so a reader of the lake
+  never sees a parked partition as a second ``day=`` value, and
+  ``recover_swaps`` rolls forward every parked partition with one
+  listing of the lake root — before a whole-lake rewrite such as
+  ``compact_lake`` could drop it along with the old directory.
 """
 
 from __future__ import annotations
@@ -44,14 +54,21 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
+_PARKED = "._old"
+
+
 def _old_path(path: str) -> str:
-    return path.rstrip("/") + "._old"
+    """Parked copy of ``path`` during a swap: a sibling whose leading
+    ``.`` hides it from partition discovery and file listing."""
+    head, sep, name = path.rstrip("/").rpartition("/")
+    return f"{head}{sep}.{name}{_PARKED}"
 
 
 def recover_swap(spark: SparkSession, path: str) -> bool:
     """Roll forward a swap that crashed between the aside-rename and
-    the rename-into-place: if ``path`` is missing but ``path._old``
-    survives, restore it. Returns True if a recovery happened.
+    the rename-into-place: if ``path`` is missing but its parked copy
+    (:func:`_old_path`) survives, restore it. Returns True if a
+    recovery happened.
 
     Callers that probe ``fs.exists(path)`` to decide "no table yet"
     MUST call this first — otherwise a crashed swap reads as an empty
@@ -68,17 +85,35 @@ def recover_swap(spark: SparkSession, path: str) -> bool:
     return False
 
 
+def recover_swaps(spark: SparkSession, path: str) -> set[str]:
+    """:func:`recover_swap` for the lake at ``path`` and for every
+    partition directory directly under it, then the names of the
+    entries under ``path`` (empty when there is no lake yet). One
+    listing of ``path``; nothing below it is listed."""
+    recover_swap(spark, path)
+    fs, dest = _hadoop_fs(spark, path)
+    if not fs.exists(dest):
+        return set()
+    names = {st.getPath().getName() for st in fs.listStatus(dest)}
+    for name in list(names):
+        if name.startswith(".") and name.endswith(_PARKED):
+            live = name[1 : -len(_PARKED)]
+            if live not in names and recover_swap(spark, f"{path.rstrip('/')}/{live}"):
+                names.add(live)
+    return names
+
+
 def _commit_swap(spark: SparkSession, path: str, tmp: str) -> None:
     """Replace ``path`` with the fully-written ``tmp`` directory.
 
-    Sequence: rename the live dir aside (``path`` -> ``path._old``),
-    rename ``tmp`` into place, then delete ``._old`` — so no crash
-    point loses data: before the aside-rename the old lake is live;
-    between the two renames both the old data (at ``._old``) and the
-    new data (at ``tmp``) survive on disk and ``recover_swap`` rolls
-    the table forward on the next touch; after the second rename the
-    new lake is live. Only metadata ops (renames) are in the window —
-    never a delete of the sole copy.
+    Sequence: rename the live dir aside to its parked copy
+    (:func:`_old_path`), rename ``tmp`` into place, then delete the
+    parked copy — so no crash point loses data: before the aside-rename
+    the old lake is live; between the two renames both the old data
+    (parked) and the new data (at ``tmp``) survive on disk and
+    ``recover_swap`` rolls the table forward on the next touch; after
+    the second rename the new lake is live. Only metadata ops (renames)
+    are in the window — never a delete of the sole copy.
 
     Module-level seam so tests can fault-inject a crash between the
     temp write and the swap and assert the old lake is intact.
@@ -110,7 +145,7 @@ def upsert_latest(
     ts_col: str = "ts",
 ) -> None:
     """Keep the newest row per key across existing data and updates."""
-    recover_swap(spark, path)
+    recover_swaps(spark, path)
     fs, dest = _hadoop_fs(spark, path)
     tmp = path.rstrip("/") + "._tmp_upsert"
     _, tpath = _hadoop_fs(spark, tmp)
@@ -133,7 +168,7 @@ def upsert_latest(
 
 def compact_lake(spark: SparkSession, path: str, partition_cols: list[str]) -> None:
     """Rewrite a partitioned lake with one file per partition value."""
-    recover_swap(spark, path)
+    recover_swaps(spark, path)
     fs, _ = _hadoop_fs(spark, path)
     tmp = path.rstrip("/") + "._tmp_compact"
     _, tpath = _hadoop_fs(spark, tmp)
@@ -174,7 +209,7 @@ def forget_subject(
     The audit is computed from the SAME scan lineage before the swap
     (counts per partition), so what it reports is exactly what was
     erased."""
-    recover_swap(spark, path)
+    recover_swaps(spark, path)
     fs, _ = _hadoop_fs(spark, path)
     tmp = path.rstrip("/") + "._tmp_forget"
     _, tpath = _hadoop_fs(spark, tmp)

@@ -2,11 +2,13 @@
 
 TimescaleDB refreshes its ``traffic_1min`` continuous aggregate
 incrementally — only buckets invalidated by new rows are recomputed
-(``pipline2/init-timescaledb.sql:63-68``). The Spark-native twin is a
-``foreachBatch`` loop: each micro-batch contributes PARTIAL aggregates
-for only the (zone, minute) buckets it touches, and those partials are
-merged additively into the rollup lake — never a from-scratch recompute
-of the whole rollup, never a full-history rescan.
+(``pipline2/init-timescaledb.sql:63-68``) — and stores them in time
+chunks. The Spark-native twin is a ``foreachBatch`` loop over a rollup
+lake partitioned by UTC ``day``: each micro-batch contributes PARTIAL
+aggregates for only the (zone, minute) buckets it touches, and those
+partials are merged additively into only the ``day=`` partitions they
+fall in — never a from-scratch recompute of the rollup, never a rescan
+or rewrite of days the batch does not touch.
 
 Correctness pieces:
 
@@ -16,19 +18,29 @@ Correctness pieces:
   merge lossy.
 - foreachBatch can REPLAY a batch after a crash; the merge is made
   idempotent by recording ``last_batch_id`` in the lake rows and
-  skipping any batch id at-or-below the high-water mark. Because the
-  lake swap is a single-directory replace (maintenance._commit_swap),
-  the data and the bookkeeping commit together.
+  skipping, PER PARTITION, a batch id at-or-below that partition's
+  high-water mark. Each touched partition is swapped in on its own
+  (maintenance._commit_swap on the partition directory), and a
+  partition's data and its bookkeeping commit together, so a replay
+  after a crash between two partition swaps applies exactly the
+  partitions the crashed attempt had not swapped yet. A swap that
+  crashed inside its rename window leaves a hidden parked copy that
+  ``maintenance.recover_swaps`` rolls forward before anything is read.
 - Money/reading sums stay in DECIMAL(18,2) across merges so the rollup
   equals the batch recompute bit-for-bit (pytest-asserted against the
   one-shot groupBy).
 
 At 100 TB the rollup lake is a fraction of the fact stream (one row per
-zone-minute), so the per-batch read-merge-swap touches only rollup-sized
-data; the fact stream is consumed once, map-side-partially aggregated.
+zone-minute), and the per-batch read-merge-swap reads and rewrites only
+the days the batch touches (one or two for a live stream), so its cost
+follows the batch, not the history; the fact stream is consumed once,
+map-side-partially aggregated.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +66,13 @@ def _minute_partials(df: DataFrame) -> DataFrame:
     )
 
 
+def _partition_dir(spark: SparkSession, col: str, value) -> str:
+    """Directory name Spark's partitioned writer gives ``col=value``
+    (escaped; NULL is the Hive default partition)."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return utils.getPartitionPathString(col, None if value is None else str(value))
+
+
 def merge_partials_into_lake(
     spark: SparkSession,
     path: str,
@@ -61,35 +80,78 @@ def merge_partials_into_lake(
     keys: tuple[str, ...],
     merge_aggs: list,
     batch_id: int,
+    partition_col: str,
 ) -> None:
-    """Generic idempotent read-merge-swap of one batch's partials into a
-    rollup lake. ``part`` must carry ``last_batch_id``; ``merge_aggs``
-    are the monoid merges applied on ``groupBy(keys)`` over
-    current ∪ partials and must include
-    ``F.max("last_batch_id")``. Shared by the minute rollup and the
-    incremental top-k totals (streaming/topk.py)."""
-    fs, dest = maintenance._hadoop_fs(spark, path)
-    if fs.exists(dest):
-        cur = spark.read.parquet(path)
-        applied = cur.agg(F.max("last_batch_id")).collect()[0][0]
-        if applied is not None and batch_id <= applied:
+    """Generic idempotent, partition-scoped read-merge-swap of one
+    batch's partials into a rollup lake partitioned by
+    ``partition_col`` (a date or string column of ``part``). ``part``
+    must carry ``last_batch_id``; ``merge_aggs`` are the monoid merges
+    applied on ``groupBy(keys)`` over current ∪ partials and must
+    include ``F.max("last_batch_id")``. Shared by the minute rollup and
+    the incremental top-k totals (streaming/topk.py).
+
+    One small job lists the partitions the partials touch (skipped
+    while the lake holds no partition yet); only those directories are
+    read (explicit paths under ``basePath``), a partition already
+    holding this batch is skipped, the merged rows are written once
+    with ``partitionBy`` to a temp sibling, and each partition
+    directory that write produced is swapped in on its own."""
+    live = maintenance.recover_swaps(spark, path)
+    root = path.rstrip("/")
+    prefix = f"{partition_col}="
+    touched, present = [], []
+    if any(n.startswith(prefix) for n in live):
+        touched = [r[0] for r in part.select(partition_col).distinct().collect()]
+        present = [
+            d for d in (_partition_dir(spark, partition_col, v) for v in touched) if d in live
+        ]
+    merged = part
+    if present:
+        # The partials' schema pins the partition column's type, so
+        # nothing is inferred from directory names.
+        cur = (
+            spark.read.schema(part.schema)
+            .option("basePath", root)
+            .parquet(*[f"{root}/{d}" for d in present])
+        )
+        done = [
+            r[0]
+            for r in cur.groupBy(partition_col)
+            .agg(F.max("last_batch_id").alias("applied"))
+            .filter(F.col("applied") >= batch_id)
+            .collect()
+        ]
+        if len(done) == len(touched):
             return  # crash-replay of an already-merged batch
-        merged = cur.unionByName(part).groupBy(*keys).agg(*merge_aggs)
-    else:
-        merged = part
-    tmp = path.rstrip("/") + "._tmp_contagg"
+        if done:  # a replay that crashed partway: merge the rest only
+            skip = reduce(or_, [F.col(partition_col).eqNullSafe(F.lit(v)) for v in done])
+            part, cur = part.filter(~skip), cur.filter(~skip)
+        group = keys if partition_col in keys else (*keys, partition_col)
+        merged = cur.unionByName(part).groupBy(*group).agg(*merge_aggs)
+    fs, dest = maintenance._hadoop_fs(spark, root)
+    tmp = root + "._tmp_contagg"
     _, tpath = maintenance._hadoop_fs(spark, tmp)
     if fs.exists(tpath):
         fs.delete(tpath, True)
-    merged.write.mode("overwrite").parquet(tmp)
-    maintenance._commit_swap(spark, path, tmp)
+    merged.write.partitionBy(partition_col).mode("overwrite").parquet(tmp)
+    fs.mkdirs(dest)
+    for st in fs.listStatus(tpath):
+        name = st.getPath().getName()
+        if name.startswith(prefix):
+            maintenance._commit_swap(spark, f"{root}/{name}", f"{tmp}/{name}")
+    fs.delete(tpath, True)
 
 
 def refresh_minute_rollup(
     spark: SparkSession, path: str, batch_df: DataFrame, batch_id: int
 ) -> None:
     """Merge one micro-batch's partials into the rollup lake (idempotent)."""
-    part = _minute_partials(batch_df).withColumn("last_batch_id", F.lit(batch_id))
+    # The UTC day whatever the session time zone, so a bucket always
+    # lands in the same partition.
+    day = F.date_from_unix_date(F.floor(F.col("minute").cast("long") / 86400).cast("int"))
+    part = _minute_partials(batch_df).select(
+        "*", F.lit(batch_id).alias("last_batch_id"), day.alias("day")
+    )
     merge_partials_into_lake(
         spark,
         path,
@@ -102,6 +164,7 @@ def refresh_minute_rollup(
             F.max("last_batch_id").alias("last_batch_id"),
         ],
         batch_id,
+        "day",
     )
 
 
@@ -118,7 +181,8 @@ def continuous_minute_rollup(
 
 
 def read_minute_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """User-facing view: derives avg from the mergeable state."""
+    """User-facing view: derives avg from the mergeable state (the
+    ``day`` partition column stays internal)."""
     df = spark.read.parquet(path)
     return df.select(
         "zone",

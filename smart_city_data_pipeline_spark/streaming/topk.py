@@ -12,9 +12,14 @@ AGGREGATE, never of facts.
 
 State size is the (zone, sensor) cardinality — a vanishing fraction of
 the fact stream at 100 TB — and each micro-batch touches only
-rollup-sized data (same read-merge-swap as the continuous minute
-aggregate, shared via :func:`cont_agg.merge_partials_into_lake`,
-including the batch-id high-water mark for crash-replay idempotency).
+rollup-sized data: the totals lake is partitioned by ``zone``, the
+partition key of the rank window, and a batch reads, merges and swaps
+only the ``zone=`` directories it touches (the same partition-scoped
+read-merge-swap as the continuous minute aggregate, shared via
+:func:`cont_agg.merge_partials_into_lake`, including the per-partition
+batch-id high-water mark for crash-replay idempotency). As in any
+Hive-style partitioned lake, an empty-string zone is stored in the
+default partition and reads back as NULL.
 
 The batch twin is ``operators/timeseries.py top_sensors_per_zone``
 (full oracle in the driver gate); the pytest chain asserts
@@ -64,6 +69,7 @@ def refresh_sensor_totals(
             F.max("last_batch_id").alias("last_batch_id"),
         ],
         batch_id,
+        "zone",
     )
 
 

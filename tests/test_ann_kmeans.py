@@ -102,3 +102,13 @@ def test_kmeans_training_is_integer_exact(spark, clustered):
             assert float(v).is_integer(), v
     # training twice yields the identical quantizer (determinism)
     assert cents == _train_kmeans(df, k=N_CENTERS, iters=3)
+
+
+def test_kmeans_training_ignores_null_embedding(spark, clustered):
+    """A NULL embedding row neither seeds a centroid nor lands in a
+    cell: training returns the same quantizer as without it."""
+    df, _ = clustered
+    null_row = spark.createDataFrame([(10_000, None)], df.schema)
+    assert _train_kmeans(df.unionByName(null_row), k=N_CENTERS, iters=3) == (
+        _train_kmeans(df, k=N_CENTERS, iters=3)
+    )

@@ -182,3 +182,47 @@ def test_forget_subject_crash_leaves_lake_intact(spark, sf_dir, tmp_path, monkey
     with _pytest.raises(RuntimeError):
         maintenance.forget_subject(spark, lake, "user_id", [1], None)
     assert spark.read.parquet(lake).count() == n0
+
+
+@pytest.mark.parametrize("crashed", ["compact_lake", "refresh", "refresh_then_compact"])
+def test_rollup_refresh_rolls_forward_crashed_swap(
+    spark, sf_dir, tmp_path, monkeypatch, crashed
+):
+    """A crash between the aside-rename and the rename-into-place leaves
+    the only copy of the history in a hidden parked directory: of the
+    whole rollup lake (a crashed compaction) or of one day partition (a
+    crashed refresh). The next refresh or compaction must roll it
+    forward before it reads; taking the directory for a new one, or
+    rewriting the lake without it, would drop its history."""
+    from smart_city_data_pipeline_spark.streaming.cont_agg import (
+        _minute_partials,
+        refresh_minute_rollup,
+    )
+
+    ev = table(spark, sf_dir, "events").filter(F.dayofmonth("ts") <= 2)
+    hist, new = ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)
+    lake = str(tmp_path / "rollup")
+    refresh_minute_rollup(spark, lake, hist, 0)
+
+    def crash_in_window(spark_, path_, tmp_):
+        fs, dest = maintenance._hadoop_fs(spark_, path_)
+        fs.rename(dest, maintenance._hadoop_fs(spark_, maintenance._old_path(path_))[1])
+        raise RuntimeError("simulated crash inside the swap window")
+
+    monkeypatch.setattr(maintenance, "_commit_swap", crash_in_window)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        if crashed == "compact_lake":
+            compact_lake(spark, lake, ["day"])
+        else:
+            refresh_minute_rollup(spark, lake, new, 1)
+    monkeypatch.undo()
+    if crashed != "compact_lake":  # the parked day is hidden from readers
+        assert len(spark.read.parquet(lake).select("day").distinct().collect()) == 1
+    if crashed == "refresh_then_compact":
+        compact_lake(spark, lake, ["day"])
+
+    refresh_minute_rollup(spark, lake, new, 1)
+    cols = ["zone", "minute", "total_value", "n_events", "peak_value"]
+    assert sorted(map(tuple, spark.read.parquet(lake).select(*cols).collect())) == sorted(
+        map(tuple, _minute_partials(ev).collect())
+    )

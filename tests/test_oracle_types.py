@@ -11,7 +11,8 @@ CAST(... AS BIGINT) at the oracle's output; this lint keeps the class
 extinct.
 
 DuckDB-only (no Spark session): runs every oracle at sf0.001 and
-asserts no result column is HUGEINT/UHUGEINT.
+asserts no result column is HUGEINT/UHUGEINT, one test per registry
+key so a failure names its key and ``--durations`` shows each cost.
 """
 
 from __future__ import annotations
@@ -38,15 +39,13 @@ def con():
     return c
 
 
-def test_no_oracle_emits_hugeint(con):
-    bad = {}
-    for name, sql in all_oracles().items():
-        rel = con.sql(sql)
-        cols = [
-            c
-            for c, t in zip(rel.columns, rel.types)
-            if str(t) in ("HUGEINT", "UHUGEINT")
-        ]
-        if cols:
-            bad[name] = cols
-    assert bad == {}, f"oracles emitting HUGEINT columns: {bad}"
+ORACLES = all_oracles()
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_no_oracle_emits_hugeint(con, name):
+    rel = con.sql(ORACLES[name])
+    bad = [
+        c for c, t in zip(rel.columns, rel.types) if str(t) in ("HUGEINT", "UHUGEINT")
+    ]
+    assert bad == [], f"{name} emits HUGEINT columns: {bad}"

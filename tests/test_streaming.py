@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import glob
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from smart_city_data_pipeline_spark.catalog import table
@@ -285,6 +287,46 @@ def test_continuous_minute_rollup_incremental(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, via_lake.collect())) == sorted(
         map(tuple, minute_rollup_batch(spark, sf_dir).collect())
     )
+
+
+def test_minute_rollup_replay_after_partial_crash(spark, sf_dir, tmp_path, monkeypatch):
+    """A batch whose partials span two day partitions crashes after its
+    first partition swap. The replay merges the other partition only
+    (per-partition high-water mark), so the lake equals the one-shot
+    partials; a second replay is a no-op; the user-facing view never
+    shows the internal ``day`` column."""
+    from smart_city_data_pipeline_spark.sources import maintenance
+    from smart_city_data_pipeline_spark.streaming.cont_agg import (
+        _minute_partials,
+        read_minute_rollup,
+        refresh_minute_rollup,
+    )
+
+    ev = table(spark, sf_dir, "events").filter(F.dayofmonth("ts") <= 2)
+    lake = str(tmp_path / "rollup")
+    refresh_minute_rollup(spark, lake, ev.filter(F.col("event_id") % 2 == 0), 0)
+    batch = ev.filter(F.col("event_id") % 2 == 1)
+
+    real_swap, swapped = maintenance._commit_swap, []
+
+    def crash_after_first_swap(spark_, path_, tmp_):
+        if swapped:
+            raise RuntimeError("simulated crash between partition swaps")
+        real_swap(spark_, path_, tmp_)
+        swapped.append(path_)
+
+    monkeypatch.setattr(maintenance, "_commit_swap", crash_after_first_swap)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        refresh_minute_rollup(spark, lake, batch, 1)
+    monkeypatch.undo()
+    assert len(swapped) == 1
+
+    cols = ["zone", "minute", "total_value", "n_events", "peak_value"]
+    want = sorted(map(tuple, _minute_partials(ev).collect()))
+    for _ in range(2):  # the replay, then a replay of the replay
+        refresh_minute_rollup(spark, lake, batch, 1)
+        assert sorted(map(tuple, spark.read.parquet(lake).select(*cols).collect())) == want
+    assert "day" not in read_minute_rollup(spark, lake).columns
 
 
 def test_session_windows_match_batch(spark, sf_dir, tmp_path):
