@@ -30,32 +30,6 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def dataset_fingerprint(sf_dir: str, name: str) -> tuple:
-    """Cheap identity of a table's backing parquet for process-lifetime
-    caches of per-dataset statistics (label counts, trained centroids):
-    ``(path, total_bytes, max_mtime_ns)``. If the data under ``sf_dir``
-    is regenerated in-process (test fixtures, notebook reuse) the
-    fingerprint changes and stale cached statistics are not reused.
-    Handles both a single parquet file and a Spark-written directory;
-    a missing path fingerprints as (path, -1, -1) rather than raising —
-    the subsequent read reports the real error.
-    """
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(p)
-        if not os.path.isdir(p):
-            return (p, st.st_size, st.st_mtime_ns)
-        size, mtime = 0, st.st_mtime_ns
-        with os.scandir(p) as it:
-            for entry in it:
-                s = entry.stat()
-                size += s.st_size
-                mtime = max(mtime, s.st_mtime_ns)
-        return (p, size, mtime)
-    except OSError:
-        return (p, -1, -1)
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Plain parquet scan → pushdown-friendly.
 

@@ -34,7 +34,7 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import dataset_fingerprint, spread, table
+from smart_city_data_pipeline_spark.catalog import spread, table
 from smart_city_data_pipeline_spark.functions.hashing import md5_long, md5_long_sql
 from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
 from smart_city_data_pipeline_spark.functions.vector import dot, dot_sql
@@ -266,14 +266,13 @@ def _band_cols() -> tuple:
 BAND_BUCKET_CAP = 20_000
 
 # Oversized buckets are a property of the DATA, not the query, and
-# their count is bounded at band_rows/cap by construction — so (the
-# `_label_counts` posture) the set is computed ONCE per process per
-# dataset and embedded at plan time. On a healthy corpus it is EMPTY
+# their count is bounded at band_rows/cap by construction — so the set
+# is collected on every call (one small aggregate, the `_label_counts`
+# posture) and embedded at plan time. On a healthy corpus it is EMPTY
 # and the guard costs ZERO runtime plan nodes: no counts subplan, no
 # marker join — the plan is byte-identical to the unguarded one. Only
 # a set larger than the embed budget falls back to the in-plan join.
 BAND_OVER_EMBED_MAX = 4096
-_BAND_OVER_CACHE: dict[tuple, tuple] = {}
 
 
 def _bands_frame(sig: DataFrame, with_refine: bool) -> DataFrame:
@@ -298,19 +297,13 @@ def _bands_frame(sig: DataFrame, with_refine: bool) -> DataFrame:
     )
 
 
-def _oversized_band_buckets(
-    sig: DataFrame, bucket_cap: int, dataset_key, embed_max: int
-):
+def _oversized_band_buckets(sig: DataFrame, bucket_cap: int, embed_max: int):
     """The (band_idx, band_hash) buckets holding more than
     ``bucket_cap`` rows — one map-side-combinable aggregate whose
     result is bounded at band_rows/cap; at most ``embed_max + 1`` rows
     reach the driver (the +1 row is the 'too many to embed' signal).
-    Cached per (dataset fingerprint, cap) in ``_BAND_OVER_CACHE``
-    (unlike :func:`_label_counts`, which runs on every call). Returns
-    None when the set exceeds the embed budget."""
-    ck = None if dataset_key is None else (dataset_key, bucket_cap)
-    if ck is not None and ck in _BAND_OVER_CACHE:
-        return _BAND_OVER_CACHE[ck]
+    Runs on every call, like :func:`_label_counts`. Returns None when
+    the set exceeds the embed budget."""
     rows = (
         _bands_frame(sig, with_refine=False)
         .groupBy("band_idx", "band_hash")
@@ -320,20 +313,14 @@ def _oversized_band_buckets(
         .limit(embed_max + 1)
         .collect()
     )
-    over = (
-        None
-        if len(rows) > embed_max
-        else tuple(sorted((int(r["band_idx"]), r["band_hash"]) for r in rows))
-    )
-    if ck is not None:
-        _BAND_OVER_CACHE[ck] = over
-    return over
+    if len(rows) > embed_max:
+        return None
+    return tuple(sorted((int(r["band_idx"]), r["band_hash"]) for r in rows))
 
 
 def _band_pairs(
     sig: DataFrame,
     bucket_cap: int | None = BAND_BUCKET_CAP,
-    dataset_key=None,
     embed_max: int = BAND_OVER_EMBED_MAX,
 ) -> DataFrame:
     """Distinct LSH candidate pairs from a wide signature table: slim
@@ -362,7 +349,7 @@ def _band_pairs(
     the guard, and all three forms are pytest-exercised.
     """
     over = (
-        _oversized_band_buckets(sig, bucket_cap, dataset_key, embed_max)
+        _oversized_band_buckets(sig, bucket_cap, embed_max)
         if bucket_cap is not None
         else ()
     )
@@ -420,7 +407,7 @@ def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _minhash_sig_wide(spark, sf_dir).select(
         "doc_id", *[F.col(f"m{i}") for i in range(N_MINHASH)]
     )
-    cand = _band_pairs(sig, dataset_key=dataset_fingerprint(sf_dir, "documents")).withColumn("is_cand", F.lit(1))
+    cand = _band_pairs(sig).withColumn("is_cand", F.lit(1))
     truth = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
@@ -484,7 +471,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_sig_wide(spark, sf_dir)
         .select("doc_id", *[F.col(f"m{i}") for i in range(N_MINHASH)])
     )
-    pairs = _band_pairs(sig, dataset_key=dataset_fingerprint(sf_dir, "documents"))
+    pairs = _band_pairs(sig)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     sim = _minhash_eq_sim()
     return (
@@ -2591,9 +2578,7 @@ def minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", *[F.col(f"m{i}") for i in range(N_MINHASH)])
         .localCheckpoint(eager=True)
     )
-    pairs = _band_pairs(
-        sig, dataset_key=dataset_fingerprint(sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    pairs = _band_pairs(sig).localCheckpoint(eager=True)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     n_eq = functools.reduce(
         operator.add,
@@ -2983,8 +2968,7 @@ def text_embedding_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _band_pairs(
         _minhash_sig_wide(spark, sf_dir).select(
             "doc_id", *[F.col(f"m{i}") for i in range(N_MINHASH)]
-        ),
-        dataset_key=dataset_fingerprint(sf_dir, "documents"),
+        )
     ).localCheckpoint(eager=True)
     sh = _hashed_shingles(spark, sf_dir).localCheckpoint(eager=True)
     sizes = sh.groupBy("doc_id").agg(
@@ -3642,9 +3626,7 @@ def rouge2_candidate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     tb = bg.groupBy("doc_id").agg(F.sum("c").alias("n_bg"))
-    cand = _band_pairs(
-        _minhash_sig_wide(spark, sf_dir), dataset_key=dataset_fingerprint(sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    cand = _band_pairs(_minhash_sig_wide(spark, sf_dir)).localCheckpoint(eager=True)
     ba, bb = bg.alias("ba"), bg.alias("bb")
     ov = (
         cand.join(ba, F.col("doc_a") == F.col("ba.doc_id"))
@@ -3792,9 +3774,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (deg, ed, n_nodes) re-references the edge view — lazily shared,
     # the shingle→signature→band-join pipeline ran ~6× in one plan
     # (32 parquet scans measured — guide §7.2/§5). Materialize once.
-    cand = _band_pairs(
-        _minhash_sig_wide(spark, sf_dir), dataset_key=dataset_fingerprint(sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    cand = _band_pairs(_minhash_sig_wide(spark, sf_dir)).localCheckpoint(eager=True)
     edges = cand.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(
@@ -4522,7 +4502,7 @@ def cross_source_neardup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_sig_wide(spark, sf_dir)
         .select("doc_id", *[F.col(f"m{i}") for i in range(N_MINHASH)])
     )
-    pairs = _band_pairs(sig, dataset_key=dataset_fingerprint(sf_dir, "documents"))
+    pairs = _band_pairs(sig)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     sim = _minhash_eq_sim()
     verified = (

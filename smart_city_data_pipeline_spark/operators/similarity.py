@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_city_data_pipeline_spark.catalog import spread, table
@@ -2398,50 +2398,89 @@ ORACLES["cluster_label_nmi"] = _cluster_label_nmi_oracle_sql()
 
 # k-core peeling: iterative "remove nodes with degree < k" to a
 # fixpoint. KCORE_ROUNDS is the shared iteration cap: the Spark loop
-# early-exits at the fixpoint (peeling is monotone — count equality
-# implies set equality) and the oracle replays EXACTLY this many
+# early-exits at the fixpoint and the oracle replays EXACTLY this many
 # rounds (idempotent past the fixpoint, so the two agree whenever the
-# graph converges within the cap; measured convergence on this graph
-# family is <= 4 rounds — the cap leaves 6x headroom and is asserted
-# in the pytest).
+# graph converges within the cap). Measured rounds of the fused loop,
+# confirming round included: 3 on the sf0.001 and sf0.01 lakes and on
+# the benchmark's planted graph, 15 on sf0.1, where a long pendant
+# chain peels one edge a round. ``test_rounds_headroom`` asserts 2x
+# headroom on the test lake.
 KCORE_ROUNDS = 24
+KCORE_KS = (2, 3)
 
 
-def _peel_step(cur: DataFrame, k: int) -> DataFrame:
-    deg = (
-        cur.select("label", F.col("u").alias("node"))
-        .unionAll(cur.select("label", F.col("v").alias("node")))
-        .groupBy("label", "node")
-        .agg(F.count(F.lit(1)).alias("d"))
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` DataFrame that nothing
+    reads any more; ``DataFrame.unpersist()`` does not reach them."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _peel_cores(
+    edges: DataFrame, ks: tuple[int, ...] = KCORE_KS
+) -> tuple[DataFrame, int]:
+    """Peel every k in ``ks`` from the same edge set in ONE loop:
+    returns the surviving ``(k, label, u, v)`` rows of each k-core and
+    the number of rounds run.
+
+    Each edge is tagged once per k and each round is one
+    ``(k, label, node)`` degree aggregate filtered on ``d >= k`` plus
+    two keyed joins, the same plan shape as a single-k round. The row
+    count comes from the checkpointing job itself (an ``Observation``
+    on the eager ``localCheckpoint``), so a round is one job chain with
+    no separate count probe, and a superseded round's blocks are freed
+    once the next round is materialized. Early exit is exact: peeling
+    is monotone per k, so an unchanged total count means every k is at
+    its fixpoint, which is idempotent under the oracle's fixed
+    KCORE_ROUNDS replay. Peeling k=2 and k=3 side by side takes
+    max(3, 2) rounds on the benchmark's planted graph instead of 3 + 2.
+
+    MEASURED (``perfbench`` driver_loops, 4-vCPU VM, ten alternating
+    parent/change pairs): against one loop per k, each round a lazy
+    checkpoint plus a ``count()`` probe, and a census of three
+    ``countDistinct`` aggregates joined four ways, this loop with the
+    census of :func:`_kcore_census` took median CPU per query from
+    4.33 to 3.10 s (better in 9 of 10 pairs) and traced jobs per query
+    from 47 to 24. MEASURED negative result (sf0.1, min-of-3):
+    batching TWO peel steps per probe, the dbscan_grid trick, regressed
+    5.1 → 7.0 s; Catalyst spends more optimizing the doubled 6-join
+    plan than the saved probe jobs cost, the same cliff dbscan hit at 3
+    steps/probe."""
+    cur = functools.reduce(
+        DataFrame.unionAll,
+        [edges.select(F.lit(k).alias("k"), "label", "u", "v") for k in ks],
     )
-    keep = deg.filter(F.col("d") >= k).select("label", "node")
-    return (
-        cur.join(keep.withColumnRenamed("node", "u"), ["label", "u"])
-        .join(keep.withColumnRenamed("node", "v"), ["label", "v"])
-        .select("label", "u", "v")
-    )
+    prev, rounds = -1, 0
+    for _ in range(KCORE_ROUNDS):
+        deg = (
+            cur.select("k", "label", F.col("u").alias("node"))
+            .unionAll(cur.select("k", "label", F.col("v").alias("node")))
+            .groupBy("k", "label", "node")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        keep = deg.filter(F.col("d") >= F.col("k")).select("k", "label", "node")
+        seen = Observation()
+        nxt = (
+            cur.join(keep.withColumnRenamed("node", "u"), ["k", "label", "u"])
+            .join(keep.withColumnRenamed("node", "v"), ["k", "label", "v"])
+            .select("k", "label", "u", "v")
+            .observe(seen, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        rounds += 1
+        n = seen.get["n"]
+        if n == prev:
+            _release_checkpoint(nxt)
+            break
+        if rounds > 1:
+            _release_checkpoint(cur)
+        prev, cur = n, nxt
+    return cur, rounds
 
 
 def _peel_edges(edges: DataFrame, k: int) -> DataFrame:
-    """Iteratively drop edges incident to nodes of survivor-degree < k.
-    Each round is two keyed joins + one aggregate, one
-    localCheckpoint+count probe per round. MEASURED negative result
-    (sf0.1, min-of-3): batching TWO peel steps per probe — the
-    dbscan_grid trick — regressed 5.1 → 7.0 s here; Catalyst spends
-    more optimizing the doubled 6-join plan than the saved probe jobs
-    cost, the same cliff dbscan hit at 3 steps/probe. Early exit is
-    sound: peeling is monotone, so edge-count equality implies the
-    fixpoint, idempotent under the oracle's fixed KCORE_ROUNDS
-    replay."""
-    cur = edges
-    prev = -1
-    for _ in range(KCORE_ROUNDS):
-        nxt = _peel_step(cur, k).localCheckpoint(eager=False)
-        n = nxt.count()
-        if n == prev:
-            break
-        prev, cur = n, nxt
-    return cur
+    """The k-core edges of ``edges``: the single-k slice of
+    :func:`_peel_cores`."""
+    return _peel_cores(edges, (k,))[0].select("label", "u", "v")
 
 
 def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2455,12 +2494,17 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity (partition quality) with the classic GLOBAL density
     hierarchy (Seidman 1983).
 
-    Spark-first: peeling is a bounded loop of keyed joins + one
-    aggregate per round — no driver-side graph state, shuffle keyed on
-    (label, node) throughout. The DuckDB oracle replays the identical
-    peel as a recursive CTE carrying the surviving EDGE set (the
-    working table is referenced for both endpoint degree checks),
-    capped at the same KCORE_ROUNDS; integer counts end-to-end.
+    Spark-first: :func:`_peel_cores` peels the 2-core and the 3-core
+    both from the original graph G in one bounded loop of keyed joins
+    plus one aggregate per round — no driver-side graph state, shuffle
+    keyed on (k, label, node) throughout. The census is one
+    ``(label, node)`` aggregate over the original edges (tag 0) and the
+    peeled cores, then one ``label`` aggregate. The DuckDB oracle
+    replays the peel as recursive CTEs carrying the surviving EDGE set,
+    capped at the same KCORE_ROUNDS, and peels the 3-core from the
+    2-core. The two agree at the fixpoint: k-cores are unique and
+    nested, so the 3-core of G is the 3-core of its 2-core. Integer
+    counts end-to-end.
     """
     from smart_city_data_pipeline_spark.operators.dedup import (
         embedding_neardup,
@@ -2471,32 +2515,32 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
         .localCheckpoint(eager=False)
     )
-    core2 = _peel_edges(edges, 2)
-    core3 = _peel_edges(core2, 3)
+    return _kcore_census(edges)
 
-    def node_counts(e: DataFrame, out: str) -> DataFrame:
-        return (
-            e.select("label", F.col("u").alias("node"))
-            .unionAll(e.select("label", F.col("v").alias("node")))
-            .groupBy("label")
-            .agg(F.countDistinct("node").alias(out))
-        )
 
-    base = edges.groupBy("label").agg(F.count(F.lit(1)).alias("n_edges"))
-    n0 = node_counts(edges, "n_nodes")
-    n2 = node_counts(core2, "core2_nodes")
-    n3 = node_counts(core3, "core3_nodes")
-    return (
-        n0.join(base, "label")
-        .join(n2, "label", "left")
-        .join(n3, "label", "left")
-        .select(
-            "label",
-            "n_nodes",
-            "n_edges",
-            F.coalesce(F.col("core2_nodes"), F.lit(0)).alias("core2_nodes"),
-            F.coalesce(F.col("core3_nodes"), F.lit(0)).alias("core3_nodes"),
-        )
+def _kcore_census(edges: DataFrame) -> DataFrame:
+    """Per label of a ``(label, u, v)`` edge set: its node and edge
+    counts and the node counts of its 2-core and 3-core, zero (not
+    NULL) for a label whose core is empty. One ``(label, node)``
+    aggregate over the original edges (tag 0) and the peeled cores,
+    then one ``label`` aggregate."""
+    cores, _ = _peel_cores(edges)
+    tagged = edges.select(F.lit(0).alias("k"), "label", "u", "v").unionAll(cores)
+    ends = tagged.select(
+        "k", "label", F.col("u").alias("node"), F.lit(1).alias("is_u")
+    ).unionAll(
+        tagged.select("k", "label", F.col("v").alias("node"), F.lit(0).alias("is_u"))
+    )
+    nodes = ends.groupBy("label", "node").agg(
+        F.count(F.when((F.col("k") == 0) & (F.col("is_u") == 1), 1)).alias("e_u"),
+        F.max(F.col("k") == 2).alias("in2"),
+        F.max(F.col("k") == 3).alias("in3"),
+    )
+    return nodes.groupBy("label").agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.coalesce(F.sum("e_u"), F.lit(0)).alias("n_edges"),
+        F.count(F.when(F.col("in2"), 1)).alias("core2_nodes"),
+        F.count(F.when(F.col("in3"), 1)).alias("core3_nodes"),
     )
 
 

@@ -58,14 +58,22 @@ def test_bucket_cap_splits_flooded_buckets(spark):
     assert _pairs(_band_pairs(sig, bucket_cap=1, embed_max=0)) == [(1, 2)]
 
 
+def test_guard_aggregate_runs_on_every_call(spark, count_jobs):
+    """The oversized-bucket set is not memoized: a second construction
+    over the same signatures runs the guard aggregate again."""
+    sig = _planted_sig(spark)
+    first = count_jobs(lambda: _band_pairs(sig, bucket_cap=1))
+    second = count_jobs(lambda: _band_pairs(sig, bucket_cap=1))
+    assert first >= 1
+    assert second == first
+
+
 def test_empty_over_set_plans_the_plain_join(spark, sf_dir):
     """On a healthy corpus the guard must cost ZERO plan nodes: the
     default-cap plan is byte-identical to the uncapped plan (no sub
     key, no counts subplan, no marker join)."""
     sig = _minhash_sig_wide(spark, sf_dir)
-    capped = _band_pairs(
-        sig, dataset_key=("t", "band-noop")
-    )._jdf.queryExecution().optimizedPlan().toString()
+    capped = _band_pairs(sig)._jdf.queryExecution().optimizedPlan().toString()
     uncapped = _band_pairs(
         sig, bucket_cap=None
     )._jdf.queryExecution().optimizedPlan().toString()

@@ -75,35 +75,6 @@ def test_csv_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, ev.collect()))
 
 
-def test_dataset_fingerprint_changes_on_rewrite(tmp_path):
-    """Process-lifetime stat caches (label counts, trained centroids)
-    key on this fingerprint — a rewrite of the backing parquet must
-    produce a different key so stale statistics are not reused."""
-    import os
-
-    from smart_city_data_pipeline_spark.catalog import dataset_fingerprint
-
-    p = tmp_path / "documents.parquet"
-    p.write_bytes(b"v1")
-    f1 = dataset_fingerprint(str(tmp_path), "documents")
-    p.write_bytes(b"v2-longer")  # size change
-    f2 = dataset_fingerprint(str(tmp_path), "documents")
-    assert f1 != f2
-    os.utime(p, ns=(10**9, 10**9))  # same size, different mtime
-    f3 = dataset_fingerprint(str(tmp_path), "documents")
-    assert f3 != f2
-    # Missing paths fingerprint as sentinel rather than raising.
-    assert dataset_fingerprint(str(tmp_path), "nope")[1:] == (-1, -1)
-    # Spark-written DIRECTORY tables fingerprint too.
-    d = tmp_path / "events.parquet"
-    d.mkdir()
-    (d / "part-0.parquet").write_bytes(b"x")
-    df1 = dataset_fingerprint(str(tmp_path), "events")
-    (d / "part-1.parquet").write_bytes(b"y")
-    df2 = dataset_fingerprint(str(tmp_path), "events")
-    assert df1 != df2
-
-
 def test_jsonl_lake_malformed_lines_quarantined(spark, sf_dir, tmp_path):
     """A crash-truncated (malformed) line must neither abort the read
     nor surface as an all-null row: good rows survive intact, the raw
