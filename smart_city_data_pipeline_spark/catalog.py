@@ -105,3 +105,15 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the checkpoint blocks ``df`` reads (the ``LogicalRDD``
+    leaves of its plan: the checkpoint itself when ``df`` is one) and
+    no other caller's; ``DataFrame.unpersist()`` does not reach them.
+    Call it once a materialized successor has replaced them."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)

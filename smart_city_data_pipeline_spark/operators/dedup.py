@@ -34,7 +34,7 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import spread, table
+from smart_city_data_pipeline_spark.catalog import release_checkpoint, spread, table
 from smart_city_data_pipeline_spark.functions.hashing import md5_long, md5_long_sql
 from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
 from smart_city_data_pipeline_spark.functions.vector import dot, dot_sql
@@ -1140,14 +1140,11 @@ def star_cc_labels(
     star edges (roots never appear as a source; callers coalesce them
     to themselves).
 
-    Checkpoint lifecycle and durability are identical to the previous
-    min-label loop (see ``dedup_clusters``): eager per-round
-    checkpoints truncate lineage, superseded rounds are explicitly
-    unpersisted, ``checkpoint_dir`` switches to reliable checkpoints
-    for real clusters.
+    Checkpoint lifecycle: eager per-round checkpoints truncate lineage;
+    the probe's previous edge set is then freed by reference, so only
+    the last set, which the labels read, stays. ``checkpoint_dir``
+    switches to reliable checkpoints (see ``dedup_clusters``).
     """
-    jsc = spark.sparkContext._jsc
-
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
@@ -1156,10 +1153,6 @@ def star_cc_labels(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    base_ids = _persistent_ids()
     src, dst = pairs.columns[0], pairs.columns[1]
     edges = _ckpt(
         pairs.select(
@@ -1169,7 +1162,6 @@ def star_cc_labels(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    live_ids = _persistent_ids() - base_ids
     # |edges| is re-used by every round's convergence probe; counting
     # the PREVIOUS round's set again each round was a whole extra job
     # over the old checkpoint — carry the count forward instead (the
@@ -1179,7 +1171,6 @@ def star_cc_labels(
     converged = False
     for _ in range(max_iters):
         rounds += 1
-        pre_ids = _persistent_ids()
         # ---- large-star: v > u re-pointed at m(u) = min(N(u) ∪ {u})
         nbrs = edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1207,7 +1198,6 @@ def star_cc_labels(
         stepped = _ckpt(
             moved.union(small_min.select("src", F.col("mn").alias("dst"))).distinct()
         )
-        new_ids = _persistent_ids() - pre_ids
         # Fixpoint probe: the star map is idempotent exactly on star
         # forests, so set-equality of consecutive edge sets is the
         # convergence certificate. Both sides are DISTINCT sets, so
@@ -1221,12 +1211,7 @@ def star_cc_labels(
             and stepped.exceptAll(edges).isEmpty()
         )
         edges_count = stepped_count
-        jmap = jsc.getPersistentRDDs()
-        for rid in live_ids:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-        live_ids = new_ids
+        release_checkpoint(edges)
         edges = stepped
         if converged:
             break
@@ -1262,11 +1247,8 @@ def dedup_clusters(
     star roots likewise coalesce to themselves (a root never appears as
     a star-edge source).
 
-    Checkpoint lifecycle: each round's checkpoint TRUNCATES lineage, so
-    once the loop ends only the LAST checkpoint backs the result — the
-    edge list and every superseded round are explicitly unpersisted
-    before returning (the final one is released by the ContextCleaner
-    when the caller drops the result; nothing else survives the call).
+    Checkpoint lifecycle: the result reads one checkpoint, the last
+    star-edge round; :func:`star_cc_labels` frees every other one.
 
     Durability: the default ``localCheckpoint`` stores checkpoint
     blocks in EXECUTOR storage — lineage is truncated, so losing one
@@ -2232,6 +2214,7 @@ def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
+    release_checkpoint(edges)
     entry = vec.filter(F.col("vec_id") >= GS_N_PROBES).agg(
         F.min("vec_id").alias("entry_id")
     )
@@ -2275,10 +2258,12 @@ def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+        release_checkpoint(state)
         moved = not stepped.filter(F.col("_moved")).isEmpty()
         state = stepped.drop("_moved")
         if not moved:
             break
+    release_checkpoint(best)
     return state.select(
         "probe_id",
         "entry_id",
@@ -5511,10 +5496,13 @@ def ann_hnsw_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .localCheckpoint(eager=True)
             )
+            release_checkpoint(state)
             moved = not stepped.filter(F.col("_moved")).isEmpty()
             state = stepped.drop("_moved")
             if not moved:
                 break
+        release_checkpoint(best)
+    release_checkpoint(scored)
     return state.select(
         "probe_id",
         "entry_id",

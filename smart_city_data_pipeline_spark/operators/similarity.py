@@ -19,7 +19,7 @@ import functools
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import spread, table
+from smart_city_data_pipeline_spark.catalog import release_checkpoint, spread, table
 from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
 from smart_city_data_pipeline_spark.functions.vector import (
     cosine,
@@ -2129,6 +2129,7 @@ def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = qv.select(
         "vec_id", "q", "v2", d2_to(centers[0][2], centers[0][3]).alias("md")
     ).localCheckpoint(eager=True)
+    release_checkpoint(qv)
     radii = []
     for i in range(2, KCENTER_K + 1):
         # ONE TakeOrdered job per round: the argmax row (ties to the
@@ -2143,7 +2144,7 @@ def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         centers.append(
             (i, int(crow["vec_id"]), list(crow["q"]), float(crow["v2"]))
         )
-        state = state.select(
+        nxt = state.select(
             "vec_id",
             "q",
             "v2",
@@ -2151,7 +2152,10 @@ def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("md"), d2_to(list(crow["q"]), float(crow["v2"]))
             ).alias("md"),
         ).localCheckpoint(eager=True)
+        release_checkpoint(state)
+        state = nxt
     radii.append(float(state.agg(F.max("md")).collect()[0][0]))
+    release_checkpoint(state)
     rows = [
         (order, vid, int(radii[order - 1]))
         for order, vid, _, _ in centers
@@ -2409,12 +2413,6 @@ KCORE_ROUNDS = 24
 KCORE_KS = (2, 3)
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a ``localCheckpoint`` DataFrame that nothing
-    reads any more; ``DataFrame.unpersist()`` does not reach them."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def _peel_cores(
     edges: DataFrame, ks: tuple[int, ...] = KCORE_KS
 ) -> tuple[DataFrame, int]:
@@ -2469,10 +2467,10 @@ def _peel_cores(
         rounds += 1
         n = seen.get["n"]
         if n == prev:
-            _release_checkpoint(nxt)
+            release_checkpoint(nxt)
             break
         if rounds > 1:
-            _release_checkpoint(cur)
+            release_checkpoint(cur)
         prev, cur = n, nxt
     return cur, rounds
 
@@ -3764,6 +3762,7 @@ def mmr_diverse_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ms"),
     ).localCheckpoint(eager=True)
+    release_checkpoint(qv)
     for i in range(2, MMR_K + 1):
         score10 = (
             F.lit(MMR_LAM10) * F.col("rel")
@@ -3776,7 +3775,7 @@ def mmr_diverse_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         picks.append((i, int(crow["vec_id"]), int(crow["rel"]), int(crow["ms"])))
-        state = state.filter(F.col("vec_id") != int(crow["vec_id"])).select(
+        nxt = state.filter(F.col("vec_id") != int(crow["vec_id"])).select(
             "vec_id",
             "rel",
             "q",
@@ -3786,6 +3785,9 @@ def mmr_diverse_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long"),
             ).alias("ms"),
         ).localCheckpoint(eager=True)
+        release_checkpoint(state)
+        state = nxt
+    release_checkpoint(state)
     rows = [
         (order, vid, rel, ms, MMR_LAM10 * rel - (10 - MMR_LAM10) * ms)
         for order, vid, rel, ms in picks
@@ -3919,8 +3921,13 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = h
     for _ in range(HITS_ROUNDS):
-        a = half_round(h, "u", "v")
+        nxt = half_round(h, "u", "v")
+        # nxt is materialized: the last rounds are done (a is h at first)
+        release_checkpoint(h)
+        release_checkpoint(a)
+        a = nxt
         h = half_round(a, "v", "u")
+    release_checkpoint(edges)
     return h.join(
         a.select(F.col("node").alias("anode"), F.col("x").alias("ax")),
         F.col("node") == F.col("anode"),
@@ -4111,7 +4118,7 @@ def facility_location_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         pe = edges.filter(F.col("src") == int(crow["src"])).select(
             "v", F.col("w").alias("pw")
         )
-        cur = (
+        nxt = (
             cur.join(F.broadcast(pe), "v", "left")
             .select(
                 "v",
@@ -4121,6 +4128,10 @@ def facility_location_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+        release_checkpoint(cur)  # a no-op on the un-checkpointed first
+        cur = nxt
+    release_checkpoint(cur)
+    release_checkpoint(edges)
     return spark.createDataFrame(
         [(o, vid, g, cov) for o, vid, g, cov in picks],
         "sel_order int, vec_id long, gain long, total_coverage long",

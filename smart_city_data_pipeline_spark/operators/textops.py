@@ -17,7 +17,7 @@ import functools
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import table
+from smart_city_data_pipeline_spark.catalog import release_checkpoint, table
 from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
 from smart_city_data_pipeline_spark.functions import text as T
 
@@ -1309,25 +1309,6 @@ def gopher_word_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOP = 50  # merge candidates reported per counting pass
 
 
-def _free_loop_checkpoints(spark, base_ids: set) -> None:
-    """Release the localCheckpoint blocks a driver loop materialized:
-    checkpointed RDDs register in getPersistentRDDs but are NOT freed
-    by DataFrame.unpersist(), so without this they linger until GC
-    (the star_cc_labels cleanup discipline, shared by the tokenizer
-    training loops)."""
-    jsc = spark.sparkContext._jsc
-    jmap = jsc.getPersistentRDDs()
-    for rid in {int(i) for i in jmap.keySet().toArray()} - base_ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
-def _persistent_rdd_ids(spark) -> set:
-    jsc = spark.sparkContext._jsc
-    return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-
 def bpe_pair_counts_frame(symdf: DataFrame) -> DataFrame:
     """Adjacent-symbol-pair counting over a weighted symbol-sequence
     frame (``syms array<string>``, ``wn`` word frequency) — the inner
@@ -1560,27 +1541,27 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     sym = bpe_word_symbols(docs)
     rows = []
-    base_ids = _persistent_rdd_ids(spark)
-    try:
-        for it in range(1, BPE_TRAIN_ITERS + 1):
-            # checkpoint the (vocab-sized) symbol table: without it
-            # every iteration's action re-scans the CORPUS through the
-            # whole merge lineage — 6 full scans instead of one.
-            # localCheckpoint (not persist) also TRUNCATES lineage, so
-            # round k's plan optimizes one merge fold, not k stacked
-            # ones (A/B-measured on the wordpiece twin; guide §3.3).
-            sym = sym.localCheckpoint(eager=False)
-            top = (
-                bpe_pair_counts_frame(sym)
-                .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
-                .limit(1)
-                .collect()
-            )[0]
-            rows.append((it, top["pair"], int(top["n_pairs"])))
-            a, b = top["pair"].split(" ")
-            sym = bpe_apply_merge(sym, a, b)
-    finally:
-        _free_loop_checkpoints(spark, base_ids)
+    for it in range(1, BPE_TRAIN_ITERS + 1):
+        # checkpoint the (vocab-sized) symbol table: without it every
+        # iteration's action re-scans the CORPUS through the whole
+        # merge lineage — 6 full scans instead of one. localCheckpoint
+        # (not persist) also TRUNCATES lineage, so round k's plan
+        # optimizes one merge fold, not k stacked ones (A/B-measured on
+        # the wordpiece twin; guide §3.3). The argmax collect below
+        # materializes it, so the last round's checkpoint, which sym
+        # reads, is then freed (round 1's sym reads the corpus).
+        ckpt = sym.localCheckpoint(eager=False)
+        top = (
+            bpe_pair_counts_frame(ckpt)
+            .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
+            .limit(1)
+            .collect()
+        )[0]
+        release_checkpoint(sym)
+        rows.append((it, top["pair"], int(top["n_pairs"])))
+        a, b = top["pair"].split(" ")
+        sym = bpe_apply_merge(ckpt, a, b)
+    release_checkpoint(sym)
     return spark.createDataFrame(
         rows, "iteration int, pair string, n_pairs long"
     )
@@ -4447,6 +4428,7 @@ def ppmi_svd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("m_q") > 0)
         .collect()  # bounded: vocab^2 cells
     )
+    release_checkpoint(co)
     import math
 
     vocab = sorted({r["a"] for r in cells} | {r["b"] for r in cells})
@@ -4798,40 +4780,36 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized aggregate collapsed to a single row."""
     docs = table(spark, sf_dir, "documents")
     sym0 = bpe_word_symbols(docs)
-    base_ids = _persistent_rdd_ids(spark)
-    try:
-        cur = sym0
-        for _ in range(BPE_TRAIN_ITERS):
-            # localCheckpoint: lineage-truncating round cache (see
-            # bpe_train_merges / the star-CC loop discipline).
-            cur = cur.localCheckpoint(eager=False)
-            top = (
-                bpe_pair_counts_frame(cur)
-                .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
-                .limit(1)
-                .collect()
-            )[0]
-            a, b = top["pair"].split(" ")
-            cur = bpe_apply_merge(cur, a, b)
-        row = (
-            cur.agg(
-                F.count(F.lit(1)).alias("vocab_words"),
-                F.sum("wn").alias("total_words"),
-                F.sum(F.col("wn") * F.size("syms")).alias("syms_after"),
-            )
-            .join(
-                F.broadcast(
-                    sym0.agg(
-                        F.sum(F.col("wn") * F.size("syms")).alias(
-                            "chars_before"
-                        )
-                    )
-                )
-            )
+    cur = sym0
+    for _ in range(BPE_TRAIN_ITERS):
+        # localCheckpoint: lineage-truncating round cache, released as in
+        # bpe_train_merges
+        ckpt = cur.localCheckpoint(eager=False)
+        top = (
+            bpe_pair_counts_frame(ckpt)
+            .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
+            .limit(1)
             .collect()
         )[0]
-    finally:
-        _free_loop_checkpoints(spark, base_ids)
+        release_checkpoint(cur)
+        a, b = top["pair"].split(" ")
+        cur = bpe_apply_merge(ckpt, a, b)
+    row = (
+        cur.agg(
+            F.count(F.lit(1)).alias("vocab_words"),
+            F.sum("wn").alias("total_words"),
+            F.sum(F.col("wn") * F.size("syms")).alias("syms_after"),
+        )
+        .join(
+            F.broadcast(
+                sym0.agg(
+                    F.sum(F.col("wn") * F.size("syms")).alias("chars_before")
+                )
+            )
+        )
+        .collect()
+    )[0]
+    release_checkpoint(cur)
     from smart_city_data_pipeline_spark.functions.rounding import pround_py
 
     tw = int(row["total_words"])
@@ -5786,6 +5764,7 @@ def ulm_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines learn the identical vocabulary.
     """
     words, single_chars, counts, vocab = _ulm_fit(spark, sf_dir)
+    release_checkpoint(words)
     multis = _ulm_pruned_multis(counts)
     rows = [(ch, counts.get(ch, 0), vocab[ch]) for ch in single_chars]
     rows += [(p, c, vocab[p]) for p, c in multis]
@@ -5848,6 +5827,7 @@ def _ulm_fit(spark: SparkSession, sf_dir: str):
         .collect()
     )
     singles_rows = cnt.filter(F.length("piece") == 1).collect()
+    release_checkpoint(cnt)
     seed = {r["piece"]: int(r["c"]) for r in multi}
     seed.update({r["piece"]: int(r["c"]) for r in singles_rows})
     single_chars = sorted(r["piece"] for r in singles_rows)
@@ -6042,47 +6022,44 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     sym = bpe_word_symbols(docs)
     rows = []
-    base_ids = _persistent_rdd_ids(spark)
-    try:
-        for it in range(1, WP_TRAIN_ITERS + 1):
-            # localCheckpoint (not persist): TRUNCATES lineage, so
-            # round k's plan starts from the materialized vocab table
-            # instead of re-optimizing k stacked merge-fold rewrites
-            # (plan-compile time grows per round under persist; the
-            # star-CC loop discipline, guide §3.3). Freed in finally.
-            sym = sym.localCheckpoint(eager=False)
-            pc = bpe_pair_counts_frame(sym)
-            sc = _wp_symbol_counts(sym)
-            parts = F.split(F.col("pair"), " ")
-            j = (
-                pc.select("pair", "n_pairs", parts[0].alias("a"), parts[1].alias("b"))
-                .join(sc.select(F.col("s").alias("a"), F.col("c").alias("ca")), "a")
-                .join(sc.select(F.col("s").alias("b"), F.col("c").alias("cb")), "b")
+    for it in range(1, WP_TRAIN_ITERS + 1):
+        # localCheckpoint (not persist): TRUNCATES lineage, so round k's
+        # plan starts from the materialized vocab table instead of
+        # re-optimizing k stacked merge-fold rewrites (plan-compile time
+        # grows per round under persist; guide §3.3).
+        ckpt = sym.localCheckpoint(eager=False)
+        pc = bpe_pair_counts_frame(ckpt)
+        sc = _wp_symbol_counts(ckpt)
+        parts = F.split(F.col("pair"), " ")
+        j = (
+            pc.select("pair", "n_pairs", parts[0].alias("a"), parts[1].alias("b"))
+            .join(sc.select(F.col("s").alias("a"), F.col("c").alias("ca")), "a")
+            .join(sc.select(F.col("s").alias("b"), F.col("c").alias("cb")), "b")
+        )
+        scored = j.select(
+            "pair",
+            "n_pairs",
+            F.expr(
+                f"(CAST(n_pairs AS DECIMAL(38,0)) * {WP_SCORE_SHIFT})"
+                " DIV (CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))"
+            ).alias("score_q"),
+        )
+        top = (
+            scored.orderBy(
+                F.col("score_q").desc(),
+                F.col("n_pairs").desc(),
+                F.col("pair").asc(),
             )
-            scored = j.select(
-                "pair",
-                "n_pairs",
-                F.expr(
-                    f"(CAST(n_pairs AS DECIMAL(38,0)) * {WP_SCORE_SHIFT})"
-                    " DIV (CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))"
-                ).alias("score_q"),
-            )
-            top = (
-                scored.orderBy(
-                    F.col("score_q").desc(),
-                    F.col("n_pairs").desc(),
-                    F.col("pair").asc(),
-                )
-                .limit(1)
-                .collect()
-            )[0]
-            rows.append(
-                (it, top["pair"], int(top["n_pairs"]), int(top["score_q"]))
-            )
-            a, b = top["pair"].split(" ")
-            sym = bpe_apply_merge(sym, a, b)
-    finally:
-        _free_loop_checkpoints(spark, base_ids)
+            .limit(1)
+            .collect()
+        )[0]
+        rows.append(
+            (it, top["pair"], int(top["n_pairs"]), int(top["score_q"]))
+        )
+        release_checkpoint(sym)  # as in bpe_train_merges
+        a, b = top["pair"].split(" ")
+        sym = bpe_apply_merge(ckpt, a, b)
+    release_checkpoint(sym)
     return spark.createDataFrame(
         rows, "iteration int, pair string, n_pairs long, score_q long"
     )
@@ -6181,6 +6158,7 @@ def ulm_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("wn").alias("total_words"),
         F.sum(F.col("wn") * F.length("w")).alias("chars_before"),
     ).collect()[0]
+    release_checkpoint(words)
     from smart_city_data_pipeline_spark.functions.rounding import pround_py
 
     vw = int(stats["vocab_words"])

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import table
+from smart_city_data_pipeline_spark.catalog import release_checkpoint, table
 from smart_city_data_pipeline_spark.functions.rounding import (
     avg_exact,
     avg_exact_sql,
@@ -9908,7 +9908,7 @@ def median_polish_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("rk") == F.expr("(na + 1) DIV 2"))
                 .select(F.col(part), F.col("e").alias("m"))
             )
-            cur = cur.join(med, part).select(
+            nxt = cur.join(med, part).select(
                 "zone",
                 "h",
                 (F.col("e") - F.col("m")).alias("e"),
@@ -9919,6 +9919,8 @@ def median_polish_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("col_eff") + (F.col("m") if eff == "col_eff" else F.lit(0))
                 ).cast("long").alias("col_eff"),
             ).localCheckpoint(eager=True)
+            release_checkpoint(cur)
+            cur = nxt
     return cur.select(
         "zone",
         F.col("h").cast("int").alias("hour"),

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import table
+from smart_city_data_pipeline_spark.catalog import release_checkpoint, table
 from smart_city_data_pipeline_spark.functions.rounding import (
     avg_exact,
     avg_exact_sql,
@@ -920,7 +920,7 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the classic doubling trick that converges in O(log diameter)
     # rounds; two rounds run per checkpoint/convergence-probe so the
     # fixed per-job cost is amortized too.
-    for _ in range(DBSCAN_MAX_ITERS // (2 * DBSCAN_ROUNDS_PER_PROBE)):
+    for probe in range(DBSCAN_MAX_ITERS // (2 * DBSCAN_ROUNDS_PER_PROBE)):
         stepped = labels.withColumn("_changed", F.lit(False))
         for _r in range(DBSCAN_ROUNDS_PER_PROBE):
             nbr_min = (
@@ -956,10 +956,13 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         stepped = stepped.localCheckpoint(eager=True)
+        if probe:  # the first labels read the dense-cell checkpoint itself
+            release_checkpoint(labels)
         converged = stepped.filter(F.col("_changed")).isEmpty()
         labels = stepped.drop("_changed")
         if converged:
             break
+    release_checkpoint(edges)
 
     dense_lbl = dense.join(
         labels, dense.lbl == labels.node

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from smart_city_data_pipeline_spark.catalog import release_checkpoint
 from smart_city_data_pipeline_spark.operators.dedup import star_cc_labels
 from smart_city_data_pipeline_spark.sources import maintenance
 from smart_city_data_pipeline_spark.streaming.warehouse_sink import (
@@ -121,12 +122,12 @@ def ingest_edges_micro_batch(
 ) -> None:
     """Fold one micro-batch of near-dup edges ``(doc_a, doc_b)`` into
     the label/remap lakes as idempotent per-batch partition
-    overwrites."""
+    overwrites, freeing every checkpoint it makes before returning."""
     lab_dir = root.rstrip("/") + "/labels"
     rm_dir = root.rstrip("/") + "/remap"
-    resolved = resolve_labels(spark, root, upto=batch_id).localCheckpoint(
-        eager=True
-    )
+    prior = resolve_labels(spark, root, upto=batch_id)
+    resolved = prior.localCheckpoint(eager=True)
+    release_checkpoint(prior)  # the remap closure's star edges
     edges = batch_df.select(
         F.col("doc_a").cast("long").alias("a"),
         F.col("doc_b").cast("long").alias("b"),
@@ -146,8 +147,9 @@ def ingest_edges_micro_batch(
         )
         .filter(F.col("x") != F.col("y"))
     )
-    mapping, _, _ = star_cc_labels(spark, merge_pairs)
-    mapping = mapping.localCheckpoint(eager=True)
+    labels, _, _ = star_cc_labels(spark, merge_pairs)
+    mapping = labels.localCheckpoint(eager=True)
+    release_checkpoint(labels)
     # demoted existing roots -> remap rows (new_root < old_root by the
     # min-contraction invariant, so remap chains strictly decrease)
     old_roots = resolved.select(F.col("comp").alias("node")).distinct()
@@ -171,6 +173,8 @@ def ingest_edges_micro_batch(
     )
     new_labels.write.mode("overwrite").parquet(f"{lab_dir}/batch_id={batch_id}")
     remap_rows.write.mode("overwrite").parquet(f"{rm_dir}/batch_id={batch_id}")
+    release_checkpoint(resolved)
+    release_checkpoint(mapping)
 
 
 def continuous_cc_ingest(

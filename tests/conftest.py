@@ -45,6 +45,14 @@ def sf_dir():
 
 
 @pytest.fixture
+def persistent_rdd_ids(spark):
+    """``persistent_rdd_ids()`` returns the ids of the RDDs the session
+    keeps persisted, checkpoint blocks included."""
+    jsc = spark.sparkContext._jsc
+    return lambda: {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` runs ``fn()`` under a job group of its own and
     returns how many Spark jobs it started."""

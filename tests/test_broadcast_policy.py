@@ -250,11 +250,7 @@ def test_forced_broadcast_mutation_is_caught(spark, sf_dir):
     assert not _violations(ok)
 
 
-def _persistent_ids(spark) -> set:
-    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def test_no_leaked_cache_after_lsh(spark, sf_dir):
+def test_no_leaked_cache_after_lsh(spark, sf_dir, persistent_rdd_ids):
     """dedup LSH queries must not ADD session-lifetime cached RDDs
     (self-join reuse comes from ReuseExchange, not persist()).
     Snapshot-diff, not ==0: the iterative dedup_clusters legitimately
@@ -266,21 +262,21 @@ def test_no_leaked_cache_after_lsh(spark, sf_dir):
         embedding_srp_lsh,
     )
 
-    before = _persistent_ids(spark)
+    before = persistent_rdd_ids()
     dedup_minhash_lsh(spark, sf_dir).count()
     embedding_srp_lsh(spark, sf_dir).count()
     dedup_incremental(spark, sf_dir).count()
     cross_source_neardup_matrix(spark, sf_dir).count()
-    assert _persistent_ids(spark) - before == set()
+    assert persistent_rdd_ids() - before == set()
 
 
-def test_clusters_free_intermediate_checkpoints(spark, sf_dir):
+def test_clusters_free_intermediate_checkpoints(spark, sf_dir, persistent_rdd_ids):
     """dedup_clusters materializes per-round checkpoints; all but the
     final (result-backing) one must be unpersisted before it returns."""
     from smart_city_data_pipeline_spark.operators.dedup import dedup_clusters
 
-    before = _persistent_ids(spark)
+    before = persistent_rdd_ids()
     df = dedup_clusters(spark, sf_dir)
-    leftover = _persistent_ids(spark) - before
+    leftover = persistent_rdd_ids() - before
     assert len(leftover) <= 1, leftover  # only the final checkpoint
     assert df.count() > 0

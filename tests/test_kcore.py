@@ -78,8 +78,8 @@ def test_planted_core_membership(spark):
         .distinct()
         .collect()
     }
-    # chain peels away entirely; clique + triangle (+ bridge nodes on
-    # the 4..10 edge are NOT 2-core members: the bridge edge dies)
+    # chain peels away entirely; clique + triangle stay, and so does the
+    # bridge edge (4, 10): both of its ends keep degree >= 2
     assert nodes2 == {1, 2, 3, 4, 10, 11, 12}
     core3 = _peel_edges(df, 3)
     nodes3 = {

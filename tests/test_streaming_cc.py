@@ -113,3 +113,22 @@ def test_crash_replayed_batch_is_idempotent(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(root + "/remap").collect())) == once_rm
     assert sorted(map(tuple, resolve_labels(spark, root).collect())) == once
     assert dict(once) == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+
+
+def test_micro_batch_leaves_no_checkpoint(spark, tmp_path, persistent_rdd_ids):
+    """One micro-batch that runs both star contractions (the remap
+    closure and the merge) leaves no persistent RDD behind."""
+    root = str(tmp_path / "cc_lake")
+    ingest_edges_micro_batch(
+        spark, root, spark.createDataFrame([(1, 2), (5, 6)], EDGE_SCHEMA), 0
+    )
+    ingest_edges_micro_batch(
+        spark, root, spark.createDataFrame([(2, 5)], EDGE_SCHEMA), 1
+    )
+    before = persistent_rdd_ids()
+    ingest_edges_micro_batch(
+        spark, root, spark.createDataFrame([(6, 9), (3, 4)], EDGE_SCHEMA), 2
+    )
+    assert persistent_rdd_ids() - before == set()
+    got = {r["node"]: r["comp"] for r in resolve_labels(spark, root).collect()}
+    assert got == {1: 1, 2: 1, 5: 1, 6: 1, 9: 1, 3: 3, 4: 3}
