@@ -60,14 +60,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Split-count probe results per (source key, parallelism): the probe
-# (df.rdd.getNumPartitions()) costs a full physical-planning pass, and
-# the answer is a property of the underlying FILES, not of the filters
-# applied on top — so one probe per source table per session suffices.
-_SPREAD_CACHE: dict[tuple[str, int], bool] = {}
-
-
-def spread(df: DataFrame, *by: str, key: str | None = None) -> DataFrame:
+def spread(df: DataFrame, *by: str) -> DataFrame:
     """Ensure CPU-heavy downstream work can use every core.
 
     Parquet scans parallelize by file/row-group split; a single-row-group
@@ -78,19 +71,12 @@ def spread(df: DataFrame, *by: str, key: str | None = None) -> DataFrame:
     splits and no extra exchange is added. Only pathological inputs pay
     one cheap round-robin/hash exchange of the raw rows.
 
-    Pass ``key`` (e.g. ``f"{sf_dir}:lineitem"``) to memoize the probe per
-    source table instead of re-planning on every query construction.
+    The split-count probe (``df.rdd.getNumPartitions()``) plans the scan
+    on every call. It is not memoized, so a rewritten table is probed
+    afresh.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    ck = (key, target) if key is not None else None
-    if ck is not None and ck in _SPREAD_CACHE:
-        needs_spread = _SPREAD_CACHE[ck]
-    else:
-        needs_spread = df.rdd.getNumPartitions() < max(2, target // 2)
-        if ck is not None:
-            _SPREAD_CACHE[ck] = needs_spread
-    if not needs_spread:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
     from pyspark.sql import functions as F
 

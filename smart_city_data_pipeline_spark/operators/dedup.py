@@ -98,7 +98,7 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-evaluates the whole shingle expression per row (measured ~25%
     on this, the hottest expression in the dedup family).
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     return (
         docs.select(
             F.col("doc_id"), F.explode_outer(_shingles(F.col("text"))).alias("shingle")
@@ -116,7 +116,7 @@ _HASHED_SHINGLES_SQL = f"""
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: min doc_id per identical text is canonical."""
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     canon = (
         docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(F.min("doc_id").alias("canonical_doc_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -146,9 +146,7 @@ def dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is replaced with boilerplate shared within its doc_id÷93 bucket —
     clusters of size 2-3 exist and the multi-copy rows are
     hash-checked, not a single never-exercised row."""
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     synth_text = F.when(
         F.col("doc_id") % 31 == 0,
         F.concat(
@@ -492,7 +490,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the weighted ±tf per distinct token, so no (doc, token) pre-agg
     and only one shuffle, keyed by doc_id.
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     tok = (
         docs.select(
             "doc_id", F.explode_outer(_ws_tokens(F.col("text"))).alias("token")
@@ -589,7 +587,7 @@ def embedding_neardup(
     pytest exercises the banded plan.
     """
     cnts = _label_counts(spark, sf_dir)
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings").select(
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id",
         "label",
         "embedding",
@@ -732,7 +730,7 @@ def embedding_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     band shuffle twice — 1.37× slower). No persist() anywhere (an
     explicit cache would outlive the query and leak executor storage).
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     sig = _srp_sig()
     bands = emb.select(
         "vec_id",
@@ -782,7 +780,7 @@ def knn_graph(spark: SparkSession, sf_dir: str, k: int = KNN_K) -> DataFrame:
     per-source candidate list, which the band structure bounds. Recall
     tuning is the usual LSH dial: more/wider bands.
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     sig = _srp_sig()
     bands = emb.select(
         "vec_id",
@@ -858,7 +856,7 @@ def dedup_levenshtein(
     """
     from smart_city_data_pipeline_spark.functions.text import normalized_text
 
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     # norm feeds the block-size rollup, the semi-join probe side and
     # BOTH self-join sides — divergent exchanges, so the regex-heavy
     # normalize ran up to 4x per query (guide §7.2/§5). Materialize
@@ -933,7 +931,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.array(*_band_cols())).alias("band_idx", "band_hash"),
     )
     split = (
-        spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+        spread(table(spark, sf_dir, "documents"), "doc_id")
         .agg(F.ceil(F.max("doc_id") * INGEST_SPLIT_FRACTION).alias("split_id"))
     )
     # 1-row global aggregate: bounded, broadcast is policy-exempt.
@@ -1216,8 +1214,8 @@ def star_cc_labels(
         if converged:
             break
     # At the fixpoint every non-root node has exactly one edge to its
-    # component root; the min-aggregate is exact there and a safe
-    # (still-correct-upper-bound) contraction if the cap tripped first.
+    # component root, so the min-aggregate is exact there. Every caller
+    # raises when the cap tripped first.
     labels = edges.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("comp"))
     return labels, rounds, converged
 
@@ -1265,10 +1263,12 @@ def dedup_clusters(
     """
     if pairs is None:
         pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _, _ = star_cc_labels(
+    labels, _, converged = star_cc_labels(
         spark, pairs, max_iters=max_iters, checkpoint_dir=checkpoint_dir
     )
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    if not converged:
+        raise RuntimeError(f"star_cc_labels hit its {max_iters}-round cap")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     # Singletons (no near-dup edge) and star roots are their own
     # cluster; one left join attaches the converged labels to the
     # full corpus.
@@ -1343,9 +1343,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no df cap is needed (a boilerplate shingle costs one aggregate
     row + its occurrence count, never df² join rows).
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     occ = (
         docs.select(
             "doc_id",
@@ -1396,9 +1394,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate → occurrences joined back. Linear keyed shuffles only,
     same scale posture as :func:`exact_substring_spans`.
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     occ = (
         docs.select(
             "doc_id",
@@ -1445,9 +1441,7 @@ def source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     never by document frequency — no df cap needed. Per-source totals
     are a #sources-row aggregate, broadcast back onto the pair table.
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     src_sh = (
         docs.select(
             "source",
@@ -1502,7 +1496,7 @@ def prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the aggregate's HAVING, so output is bounded by the number of
     actual templates.
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     toks = _ws_tokens(F.col("text"))
     prefix = F.array_join(F.slice(toks, 1, PREFIX_DUP_TOKENS), " ")
     return (
@@ -1563,7 +1557,7 @@ def priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 text scan a second time (the dominant cost at 100 TB) for the
     same single shuffle.
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     hashed = docs.select(
         F.col("doc_id"),
         F.col("source"),
@@ -2167,9 +2161,7 @@ def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); ties on cosine stop the walk (strict >), so the
     DuckDB recursive-CTE replay settles on the identical node.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     vec = emb.select(
         "vec_id",
         "embedding",
@@ -2982,9 +2974,7 @@ def text_embedding_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
     )
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    ).select(
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id",
         "embedding",
         F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
@@ -4323,9 +4313,7 @@ def embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary ulp. Scale shape: band-bounded pair join, |grid| literal
     explode over the pair list, keyed counts; distinct-vector counts
     aggregate the pair endpoints."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     sig = _srp_sig()
     bands = emb.select(
         "vec_id",
@@ -5019,9 +5007,7 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the linear occurrence/df aggregates of exact_substring_spans
     (no pair join anywhere), plus ONE doc-partitioned window over only
     the DUPLICATED occurrences — bounded per doc by document length."""
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     occ = (
         docs.select(
             "doc_id",
@@ -5150,9 +5136,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its dedup story ends at exact-duplicate drops); this is the
     LLM-pipeline extension mandated by the build brief.
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     toked = docs.select("doc_id", _ws_tokens(F.col("text")).alias("tk"))
     occ = (
         docs.select(
@@ -5319,9 +5303,7 @@ def _hnsw_graph_parts(spark: SparkSession, sf_dir: str):
     scored)``: per-vector (embedding, norm, md5 layer) and the
     checkpointed deduped SRP-band candidate edges scored by exact
     cosine with both endpoints' layers attached."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     sig = _srp_sig()
     nodes = emb.select(
         "vec_id",
@@ -5668,9 +5650,7 @@ def self_repetition_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     array (no re-explode): the truncation point IS the kept-token
     count, so both engines slice and join the identical prefix.
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     toked = docs.select("doc_id", _ws_tokens(F.col("text")).alias("tk"))
     occ = (
         docs.select(
@@ -5894,9 +5874,7 @@ def dedup_remediation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     their own docstrings) joined doc-keyed to the source column, one
     grouped aggregate of exact integers, one pround'd division.
     """
-    docs_full = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs_full = spread(table(spark, sf_dir, "documents"), "doc_id")
     docs = docs_full.select("doc_id", "source")
     # The span-cut and self-repetition legs consume the IDENTICAL
     # tokenize + positional-shingle pipelines; build each once and feed

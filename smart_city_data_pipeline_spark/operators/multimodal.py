@@ -75,9 +75,7 @@ def synth_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline is concerned); metadata is a typed struct. In production this
     table is the Kafka/RTSP bridge output written to the lake.
     """
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     return docs.select(
         F.col("doc_id").alias("frame_id"),
         (F.col("doc_id") % 16).alias("camera_id"),
@@ -124,9 +122,7 @@ def synth_bmp_frames(
 
     # spread BEFORE the mapInPandas chain: a single-row-group scan would
     # otherwise serialize every Python encode/decode onto one core.
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("frame_id"), (F.col("doc_id") % 16).alias("camera_id")
     )
     if every_k is not None:
@@ -577,9 +573,7 @@ def synth_png_frames(
 
     # spread BEFORE the mapInPandas chain: a single-row-group scan would
     # otherwise serialize every Python encode/decode onto one core.
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("frame_id"), (F.col("doc_id") % 16).alias("camera_id")
     )
     if every_k is not None:
@@ -649,9 +643,7 @@ def synth_jpeg_frames(
             "silently emit 4:4:4 frames under a subsample=True request"
         )
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("frame_id"), (F.col("doc_id") % 16).alias("camera_id")
     )
     if every_k is not None:
@@ -1072,7 +1064,7 @@ def synth_wav_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
+        table(spark, sf_dir, "documents"), "doc_id"
     ).select(F.col("doc_id").alias("clip_id"), (F.col("doc_id") % 16).alias("device_id"))
 
     out_schema = T.StructType(
@@ -1287,9 +1279,7 @@ def synth_wav_gapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     has a closed form over."""
     import numpy as np
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("clip_id"),
         (F.col("doc_id") % 16).alias("device_id"),
     )
@@ -2091,9 +2081,7 @@ def video_mjpeg_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads real camera archives instead of the synthesizer."""
     import pandas as _pd
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.expr(f"doc_id DIV {VIDEO_FRAMES}").alias("video_id"),
         F.col("doc_id").alias("frame_id"),
     ).where(F.expr(f"video_id % {VIDEO_SAMPLE_VIDS} = 0"))
@@ -2227,9 +2215,7 @@ def synth_gif_frames(
         encode_gif_gray,
     )
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("frame_id"), (F.col("doc_id") % 16).alias("camera_id")
     )
     if every_k is not None:
@@ -2310,9 +2296,7 @@ def synth_wav_clips_gained(spark: SparkSession, sf_dir: str) -> DataFrame:
     field recording."""
     import numpy as np
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    ).select(
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         F.col("doc_id").alias("clip_id"), (F.col("doc_id") % 16).alias("device_id")
     )
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_city_data_pipeline_spark.catalog import release_checkpoint, spread, table
@@ -35,7 +35,7 @@ TOP_K = 5
 
 def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k neighbors for each probe (full-scan baseline)."""
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
     )
@@ -66,9 +66,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join predicate keeps only cross-label pairs, so at scale this
     rides the same bounded-probe broadcast and the per-probe heap is
     the only state. Ties break on neighbor_id."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("probe_label"),
@@ -95,7 +93,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned top-k: probes only scan their own label cell."""
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("probe_label"),
@@ -300,7 +298,7 @@ def ann_ivf_kmeans(
     partition-pruned index can reach high recall and a full-scan
     (:func:`ann_topk_cosine`) is the honest answer.
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     return kmeans_ivf_topk(emb, _train_kmeans(emb, k, iters), n_probe)
 
 
@@ -384,7 +382,7 @@ def semantic_dedup(
     pytest plants paraphrase clusters and asserts exactly one
     survivor per cluster (tests/test_semantic_dedup.py).
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     return semantic_dedup_frame(emb, _train_kmeans(emb, k, iters))
 
 
@@ -409,9 +407,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine — 64·#labels output rows, a single keyed shuffle at any
     scale.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     comp = emb.select(
         "label", F.posexplode("embedding").alias("pos0", "x")
     ).select(
@@ -459,9 +455,7 @@ def doc_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: posexplode → keyed moment aggregate (64·labels rows,
     broadcast back) → one keyed fold per vector. No window over facts.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     comp = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "x")
     ).select(
@@ -550,9 +544,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     template); this deterministic seed-codebook IS that sample's
     degenerate 0-iterations case, keeping the oracle exact.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     cb = _pq_codebook(emb)
     subs = emb.select(
         "vec_id",
@@ -631,9 +623,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and the oracle hash-matches; ties break on
     neighbor_id.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     codes = embedding_pq_codes(spark, sf_dir)
     cb = _pq_codebook(emb)
     cb_rows = [
@@ -718,9 +708,7 @@ def embedding_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the audit hash-matches exactly. Shape: posexplode →
     64-row per-dim stats (AQE broadcasts back) → one keyed max/count
     aggregate per vector; constant dims quantize to code 0 by guard."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     comp = emb.select(
         "vec_id",
         "label",
@@ -768,7 +756,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned by the IVF cell variant; this is the exact
     baseline).
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
     )
@@ -803,7 +791,7 @@ def embedding_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order-dependent across engines). One keyed aggregate,
     output bounded by label cardinality.
     """
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings")
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     q = F.floor(
         norm(F.col("embedding")) * NORM_QUANT + F.lit(0.5)
     ).cast("long")
@@ -859,9 +847,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one float leg (cosine ranking) is pround-guarded like every
     ANN entry here.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     cents = _train_kmeans(emb, ANN_KMEANS_K, ANN_KMEANS_ITERS)
 
     qe = emb.select(
@@ -1152,9 +1138,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _train_pca(spark: SparkSession, sf_dir: str):
     """(dim, n_vecs, integer mean, exact int scatter C) for the corpus."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     q = F.transform(
         F.col("embedding").cast("array<double>"),
         lambda x: F.floor(x * F.lit(PCA_Q) + F.lit(0.5)).cast("long"),
@@ -1276,9 +1260,7 @@ def embedding_abtt_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim, _n, m, C = _train_pca(spark, sf_dir)
     x = pca_top_vector(C, dim)
     n2x = sum(v * v for v in x)
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     qv = F.transform(
         F.col("embedding").cast("array<double>"),
         lambda v: F.floor(v * F.lit(PCA_Q) + F.lit(0.5)).cast("long"),
@@ -2107,9 +2089,7 @@ def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the radius reports exact integers; ties on distance break to the
     lower vec_id in both engines.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     qv = emb.select(
         "vec_id", _qvec(F.col("embedding")).alias("q")
     ).withColumn("v2", dot(F.col("q"), F.col("q")))
@@ -2249,9 +2229,7 @@ def cluster_label_nmi(
     (quantize-then-sum); divisions/normalization are the identical
     expression tree in both engines.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     cents = _train_kmeans(emb, k, iters)
     qe = emb.select("vec_id", "label", _qvec(F.col("embedding")).alias("q"))
     dists = _l2_dists(F.col("q"), cents)
@@ -2400,85 +2378,33 @@ def _cluster_label_nmi_oracle_sql() -> str:
 ORACLES["cluster_label_nmi"] = _cluster_label_nmi_oracle_sql()
 
 
-# k-core peeling: iterative "remove nodes with degree < k" to a
-# fixpoint. KCORE_ROUNDS is the shared iteration cap: the Spark loop
-# early-exits at the fixpoint and the oracle replays EXACTLY this many
-# rounds (idempotent past the fixpoint, so the two agree whenever the
-# graph converges within the cap). Measured rounds of the fused loop,
-# confirming round included: 3 on the sf0.001 and sf0.01 lakes and on
-# the benchmark's planted graph, 15 on sf0.1, where a long pendant
-# chain peels one edge a round. ``test_rounds_headroom`` asserts 2x
-# headroom on the test lake.
-KCORE_ROUNDS = 24
-KCORE_KS = (2, 3)
+# k-core peeling: drop every node of degree < k until none is left.
+# Each label's graph peels on its own, so the Spark query peels inside
+# one pandas kernel per label and the DuckDB oracle runs each label's
+# recursive CTE until a round removes nothing. Neither side has a round
+# cap: a pendant chain of any length peels to the true fixpoint.
 
 
-def _peel_cores(
-    edges: DataFrame, ks: tuple[int, ...] = KCORE_KS
-) -> tuple[DataFrame, int]:
-    """Peel every k in ``ks`` from the same edge set in ONE loop:
-    returns the surviving ``(k, label, u, v)`` rows of each k-core and
-    the number of rounds run.
-
-    Each edge is tagged once per k and each round is one
-    ``(k, label, node)`` degree aggregate filtered on ``d >= k`` plus
-    two keyed joins, the same plan shape as a single-k round. The row
-    count comes from the checkpointing job itself (an ``Observation``
-    on the eager ``localCheckpoint``), so a round is one job chain with
-    no separate count probe, and a superseded round's blocks are freed
-    once the next round is materialized. Early exit is exact: peeling
-    is monotone per k, so an unchanged total count means every k is at
-    its fixpoint, which is idempotent under the oracle's fixed
-    KCORE_ROUNDS replay. Peeling k=2 and k=3 side by side takes
-    max(3, 2) rounds on the benchmark's planted graph instead of 3 + 2.
-
-    MEASURED (``perfbench`` driver_loops, 4-vCPU VM, ten alternating
-    parent/change pairs): against one loop per k, each round a lazy
-    checkpoint plus a ``count()`` probe, and a census of three
-    ``countDistinct`` aggregates joined four ways, this loop with the
-    census of :func:`_kcore_census` took median CPU per query from
-    4.33 to 3.10 s (better in 9 of 10 pairs) and traced jobs per query
-    from 47 to 24. MEASURED negative result (sf0.1, min-of-3):
-    batching TWO peel steps per probe, the dbscan_grid trick, regressed
-    5.1 → 7.0 s; Catalyst spends more optimizing the doubled 6-join
-    plan than the saved probe jobs cost, the same cliff dbscan hit at 3
-    steps/probe."""
-    cur = functools.reduce(
-        DataFrame.unionAll,
-        [edges.select(F.lit(k).alias("k"), "label", "u", "v") for k in ks],
-    )
-    prev, rounds = -1, 0
-    for _ in range(KCORE_ROUNDS):
-        deg = (
-            cur.select("k", "label", F.col("u").alias("node"))
-            .unionAll(cur.select("k", "label", F.col("v").alias("node")))
-            .groupBy("k", "label", "node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= F.col("k")).select("k", "label", "node")
-        seen = Observation()
-        nxt = (
-            cur.join(keep.withColumnRenamed("node", "u"), ["k", "label", "u"])
-            .join(keep.withColumnRenamed("node", "v"), ["k", "label", "v"])
-            .select("k", "label", "u", "v")
-            .observe(seen, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-        n = seen.get["n"]
-        if n == prev:
-            release_checkpoint(nxt)
-            break
-        if rounds > 1:
-            release_checkpoint(cur)
-        prev, cur = n, nxt
-    return cur, rounds
-
-
-def _peel_edges(edges: DataFrame, k: int) -> DataFrame:
-    """The k-core edges of ``edges``: the single-k slice of
-    :func:`_peel_cores`."""
-    return _peel_cores(edges, (k,))[0].select("label", "u", "v")
+def _core_nodes(edges: list[tuple[int, int]], k: int) -> set[int]:
+    """Nodes of the k-core of an undirected edge list, by the queue
+    peel of Batagelj & Zaversnik (2003): a node whose degree falls
+    below k leaves and lowers each neighbour's degree, in O(m). Degree
+    counts edge ends, as the oracle's ``COUNT(*)`` does."""
+    adj: dict[int, list[int]] = {}
+    for u, v in edges:
+        adj.setdefault(u, []).append(v)
+        adj.setdefault(v, []).append(u)
+    deg = {n: len(ns) for n, ns in adj.items()}
+    queue = [n for n, d in deg.items() if d < k]
+    gone = set(queue)
+    while queue:
+        for m in adj[queue.pop()]:
+            if m not in gone:
+                deg[m] -= 1
+                if deg[m] < k:
+                    gone.add(m)
+                    queue.append(m)
+    return adj.keys() - gone
 
 
 def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2492,87 +2418,96 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity (partition quality) with the classic GLOBAL density
     hierarchy (Seidman 1983).
 
-    Spark-first: :func:`_peel_cores` peels the 2-core and the 3-core
-    both from the original graph G in one bounded loop of keyed joins
-    plus one aggregate per round — no driver-side graph state, shuffle
-    keyed on (k, label, node) throughout. The census is one
-    ``(label, node)`` aggregate over the original edges (tag 0) and the
-    peeled cores, then one ``label`` aggregate. The DuckDB oracle
-    replays the peel as recursive CTEs carrying the surviving EDGE set,
-    capped at the same KCORE_ROUNDS, and peels the 3-core from the
-    2-core. The two agree at the fixpoint: k-cores are unique and
-    nested, so the 3-core of G is the 3-core of its 2-core. Integer
-    counts end-to-end.
+    One lazy plan: the ``(label, u, v)`` near-dup edges go through
+    ``groupBy("label").applyInPandas``, and each label's kernel peels
+    its 2-core and 3-core with :func:`_core_nodes` to the true fixpoint
+    and returns that label's census row. Counts are ``bigint not
+    null``: a label whose core is empty reads 0.
+
+    Bound: one label's edge list must fit in one Python worker. The
+    label vocabulary is fixed, so the groups do not multiply with the
+    data; at sf0.1 there are 1449 edges in 10 labels, at most 183 in
+    one label. A vertex-centric Spark peel (Montresor et al., TPDS
+    2013) pays off only for a single graph larger than one task, and
+    costs one driver round trip per peel round.
+
+    The DuckDB oracle peels each label with a recursive CTE that stops
+    once a round removes nothing, and peels the 3-core from the 2-core.
+    The two agree: k-cores are unique and nested, so the 3-core of G
+    is the 3-core of its 2-core.
     """
     from smart_city_data_pipeline_spark.operators.dedup import (
         embedding_neardup,
     )
 
-    edges = (
+    def census(key, pdf):
+        import pandas as pd
+
+        edges = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+        return pd.DataFrame(
+            {
+                "label": [key[0]],
+                "n_nodes": [len(set(pdf["u"]).union(pdf["v"]))],
+                "n_edges": [len(edges)],
+                "core2_nodes": [len(_core_nodes(edges, 2))],
+                "core3_nodes": [len(_core_nodes(edges, 3))],
+            }
+        )
+
+    return (
         embedding_neardup(spark, sf_dir)
         .select("label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
-        .localCheckpoint(eager=False)
-    )
-    return _kcore_census(edges)
-
-
-def _kcore_census(edges: DataFrame) -> DataFrame:
-    """Per label of a ``(label, u, v)`` edge set: its node and edge
-    counts and the node counts of its 2-core and 3-core, zero (not
-    NULL) for a label whose core is empty. One ``(label, node)``
-    aggregate over the original edges (tag 0) and the peeled cores,
-    then one ``label`` aggregate."""
-    cores, _ = _peel_cores(edges)
-    tagged = edges.select(F.lit(0).alias("k"), "label", "u", "v").unionAll(cores)
-    ends = tagged.select(
-        "k", "label", F.col("u").alias("node"), F.lit(1).alias("is_u")
-    ).unionAll(
-        tagged.select("k", "label", F.col("v").alias("node"), F.lit(0).alias("is_u"))
-    )
-    nodes = ends.groupBy("label", "node").agg(
-        F.count(F.when((F.col("k") == 0) & (F.col("is_u") == 1), 1)).alias("e_u"),
-        F.max(F.col("k") == 2).alias("in2"),
-        F.max(F.col("k") == 3).alias("in3"),
-    )
-    return nodes.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.coalesce(F.sum("e_u"), F.lit(0)).alias("n_edges"),
-        F.count(F.when(F.col("in2"), 1)).alias("core2_nodes"),
-        F.count(F.when(F.col("in3"), 1)).alias("core3_nodes"),
+        .groupBy("label")
+        .applyInPandas(
+            census,
+            "label int, n_nodes bigint not null, n_edges bigint not null,"
+            " core2_nodes bigint not null, core3_nodes bigint not null",
+        )
     )
 
 
 QUERIES["kcore_decompose"] = kcore_decompose
 
 
+def _kcore_core_sql(name: str, src: str, k: int) -> str:
+    """Two CTEs: ``{name}_peel`` peels the ``(label, u, v)`` edges of
+    ``src`` round by round, and ``{name}`` holds each label's k-core.
+    A round keeps the edges whose two endpoints have degree >= k and
+    marks them ``done`` when it removed nothing; a label recurses only
+    while its last round is not done, so an empty or stable label
+    stops. The core is the ``done`` copy of the stable round: a label
+    whose core is empty has no rows."""
+    deg = f"""(
+                SELECT label, node, COUNT(*) AS d FROM (
+                    SELECT label, u AS node FROM {name}_peel
+                    UNION ALL
+                    SELECT label, v AS node FROM {name}_peel
+                ) GROUP BY 1, 2
+            )"""
+    return f"""
+        {name}_peel(label, u, v, done) AS (
+            SELECT label, u, v, FALSE FROM {src}
+            UNION ALL
+            SELECT label, u, v, dmin >= {k} FROM (
+                SELECT p.label, p.u, p.v, du.d AS du, dv.d AS dv,
+                       MIN(LEAST(du.d, dv.d))
+                           OVER (PARTITION BY p.label) AS dmin
+                FROM {name}_peel p
+                JOIN {deg} du ON du.label = p.label AND du.node = p.u
+                JOIN {deg} dv ON dv.label = p.label AND dv.node = p.v
+                WHERE NOT p.done
+            )
+            WHERE du >= {k} AND dv >= {k}
+        ),
+        {name} AS MATERIALIZED (
+            SELECT label, u, v FROM {name}_peel WHERE done
+        )"""
+
+
 def _kcore_oracle_sql() -> str:
     from smart_city_data_pipeline_spark.operators.dedup import (
         COSINE_NEARDUP_THRESHOLD,
     )
-
-    def peel_cte(name: str, src: str, k: int) -> str:
-        return f"""
-        {name}(t, label, u, v) AS (
-            SELECT 0, label, u, v FROM {src}
-            UNION ALL
-            SELECT p.t + 1, p.label, p.u, p.v
-            FROM {name} p
-            JOIN (
-                SELECT label, node, COUNT(*) AS d FROM (
-                    SELECT t, label, u AS node FROM {name}
-                    UNION ALL
-                    SELECT t, label, v AS node FROM {name}
-                ) GROUP BY 1, 2
-            ) du ON du.label = p.label AND du.node = p.u AND du.d >= {k}
-            JOIN (
-                SELECT label, node, COUNT(*) AS d FROM (
-                    SELECT t, label, u AS node FROM {name}
-                    UNION ALL
-                    SELECT t, label, v AS node FROM {name}
-                ) GROUP BY 1, 2
-            ) dv ON dv.label = p.label AND dv.node = p.v AND dv.d >= {k}
-            WHERE p.t < {KCORE_ROUNDS}
-        )"""
 
     return f"""
         WITH RECURSIVE emb AS (
@@ -2587,14 +2522,8 @@ def _kcore_oracle_sql() -> str:
             WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
                   >= {COSINE_NEARDUP_THRESHOLD}
         ),
-        {peel_cte('peel2', 'edges', 2)},
-        core2 AS MATERIALIZED (
-            SELECT label, u, v FROM peel2 WHERE t = {KCORE_ROUNDS}
-        ),
-        {peel_cte('peel3', 'core2', 3)},
-        core3 AS MATERIALIZED (
-            SELECT label, u, v FROM peel3 WHERE t = {KCORE_ROUNDS}
-        ),
+        {_kcore_core_sql('core2', 'edges', 2)},
+        {_kcore_core_sql('core3', 'core2', 3)},
         n0 AS (
             SELECT label, COUNT(DISTINCT node) AS n_nodes FROM (
                 SELECT label, u AS node FROM edges
@@ -2648,9 +2577,7 @@ def embedding_bq_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side is a broadcast (bounded probe set); the scan side reads
     two BIGINTs per vector instead of 64 floats — the actual win
     binary quantization buys at scale."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     comp = emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
     one = "CAST(1 AS BIGINT)"
     packed = comp.groupBy("vec_id").agg(
@@ -2838,9 +2765,7 @@ def mrl_truncation_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan reads d dims; ranks are one bounded window per (tier, probe).
     At 100 TB the d=8 tier reads 1/8th of the vector bytes — the
     actual matryoshka serving win, visible in the scan columns."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
     )
@@ -2976,9 +2901,7 @@ def retrieval_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     discounts are shared integer LITERALS (python-precomputed — libm
     log2 never enters either engine); DCG sums are integers; MRR and
     NDCG are single divisions of exact integers under pround."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
     )
@@ -3375,9 +3298,7 @@ def ivf_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable), a rank window over the CELL-BOUNDED table
     (|labels| rows — the zipf_fit allowlist class), one S-row
     re-aggregate with a 1-row total broadcast."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     cells = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n_vectors"))
     wr = Window.orderBy(F.desc("n_vectors"), F.asc("label"))
     s = IVF_N_SHARDS
@@ -3467,9 +3388,7 @@ def embedding_clip_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pround'd divisions of picked/extreme values. Shape: one
     posexplode, one dim-keyed rank window (spillable, corpus-sized per
     dim), two dim-keyed aggregates — 64 rows out."""
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     comp = emb.select(
         "vec_id",
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
@@ -3619,7 +3538,7 @@ def knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(deg, "u").localCheckpoint(eager=False)
     nodes = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
+        table(spark, sf_dir, "embeddings"), "vec_id"
     ).select(F.col("vec_id").alias("node"))
     state = nodes.select(
         "node", F.lit(PR_Q).cast(d).alias("r")
@@ -3735,9 +3654,7 @@ def mmr_diverse_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal + a running GREATEST), one TakeOrdered argmax row per
     round; the driver holds only the k picked vectors.
     """
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     qv = emb.select(
         "vec_id", _qvec(F.col("embedding")).alias("q")
     ).localCheckpoint(eager=True)
@@ -3775,6 +3692,8 @@ def mmr_diverse_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         picks.append((i, int(crow["vec_id"]), int(crow["rel"]), int(crow["ms"])))
+        if i == MMR_K:
+            break  # the last pick's state is never read again
         nxt = state.filter(F.col("vec_id") != int(crow["vec_id"])).select(
             "vec_id",
             "rel",
@@ -3876,7 +3795,7 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     nodes = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
+        table(spark, sf_dir, "embeddings"), "vec_id"
     ).select(F.col("vec_id").alias("node"))
     q_lit = f"CAST(1048576 AS {d})"
 
@@ -4014,9 +3933,7 @@ def _fl_weighted_edges(spark: SparkSession, sf_dir: str):
     from smart_city_data_pipeline_spark.operators.dedup import _srp_sig
 
     d = "decimal(38,0)"
-    emb = spread(
-        table(spark, sf_dir, "embeddings"), "vec_id", key=f"{sf_dir}:embeddings"
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     sig = _srp_sig()
     qv = emb.select(
         "vec_id", _qvec(F.col("embedding")).alias("q"), sig.alias("s")

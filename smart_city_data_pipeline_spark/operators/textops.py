@@ -173,7 +173,7 @@ def source_token_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_city_data_pipeline_spark.catalog import spread
     from smart_city_data_pipeline_spark.functions.hashing import md5_long
 
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     d = docs.select(
         "doc_id",
         "source",
@@ -442,7 +442,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_city_data_pipeline_spark.catalog import spread
     from smart_city_data_pipeline_spark.functions.hashing import md5_long
 
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents")
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     d = docs.select(
         "doc_id",
         "source",
@@ -1181,9 +1181,7 @@ def chunk_dedup_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_city_data_pipeline_spark.catalog import spread
     from smart_city_data_pipeline_spark.functions.hashing import md5_long
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     toked = docs.select(
         "doc_id", T.ws_tokens(F.lower(F.col("text"))).alias("tk")
     )
@@ -1842,9 +1840,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smart_city_data_pipeline_spark.catalog import spread
     from smart_city_data_pipeline_spark.functions.hashing import md5_long
 
-    docs = spread(
-        table(spark, sf_dir, "documents"), "doc_id", key=f"{sf_dir}:documents"
-    )
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     toked = docs.select(
         "doc_id", T.ws_tokens(F.lower(F.col("text"))).alias("tk")
     )

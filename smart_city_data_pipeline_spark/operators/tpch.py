@@ -59,7 +59,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         # spread AFTER the filter: pushdown reaches the scan, then the
         # decimal-heavy partial aggregation fans out across all cores.
-        spread(li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp")), key=f"{sf_dir}:lineitem")
+        spread(li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp")))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _money(_dec("l_quantity"), "sum_qty"),
@@ -86,7 +86,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hash-spread on the join key: the exchange satisfies the join's
     # required distribution, so it adds parallelism without an extra
     # shuffle stage.
-    li = spread(li, "l_orderkey", key=f"{sf_dir}:lineitem")
+    li = spread(li, "l_orderkey")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         # customer grows with sf — no forced hint; AQE size-gates it.
@@ -109,7 +109,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -127,7 +127,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = table(spark, sf_dir, "region")
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -147,7 +147,7 @@ def big_spender_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     big = (
-        spread(li, "l_orderkey", key=f"{sf_dir}:lineitem").groupBy("l_orderkey")
+        spread(li, "l_orderkey").groupBy("l_orderkey")
         .agg(F.sum(_dec("l_quantity")).alias("qty_dec"))
         .filter(F.col("qty_dec") > 150)
     )
@@ -217,7 +217,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = table(spark, sf_dir, "supplier")
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem").filter(
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
@@ -246,7 +246,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem").filter(
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey").filter(
         F.col("l_returnflag") == "R"
     )
     return (
@@ -315,7 +315,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg comparison is EXACTIFIED by multiplying through
     (5*qty*cnt < sum) so no double division can flip a boundary row
     between engines."""
-    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey")
     per_part = li.groupBy(F.col("l_partkey").alias("p_key")).agg(
         F.sum(_dec("l_quantity")).alias("qty_sum"),
         F.count(F.lit(1)).alias("qty_cnt"),
@@ -372,7 +372,7 @@ def late_supplier_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost a single keyed shuffle instead of two pair joins."""
     orders = table(spark, sf_dir, "orders")
     supp = table(spark, sf_dir, "supplier")
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey")
     flagged = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",
@@ -416,7 +416,7 @@ def q20_surplus_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part")
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
-    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey")
 
     y_start = F.lit("1995-01-01").cast("timestamp")
     h2_start = F.lit("1995-07-01").cast("timestamp")
@@ -459,7 +459,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Price averages divide an EXACT decimal sum by a count,
     so both engines rank identical doubles; output prices re-round
     through pround."""
-    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey")
     part = table(spark, sf_dir, "part")
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
@@ -520,7 +520,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal aggregate over supplier-level partial sums, so the fact is
     shuffled exactly once (the orders join) — the supplier join runs
     over the bounded (year × suppkey) pre-aggregate, never the fact."""
-    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_orderkey")
     orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -580,7 +580,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL. Part family is an equi-join (sf-scaled, no hint); nation
     is the only forced broadcast; ship year avoids a second fact-fact
     join against orders (documented Q9 adaptation)."""
-    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey")
     part = table(spark, sf_dir, "part")
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
@@ -607,7 +607,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part aggregate is one keyed shuffle. Threshold compares
     DECIMAL·INT against DECIMAL — exact in both engines, no float
     boundary flip."""
-    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey", key=f"{sf_dir}:lineitem")
+    li = spread(table(spark, sf_dir, "lineitem"), "l_partkey")
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
     odd_supp = supp.join(
@@ -1594,7 +1594,7 @@ def ivm_merge_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the customer key, one broadcast-size dim join for the name.
     Exactness: counts BIGINT, money in DECIMAL(18,2) end to end.
     """
-    orders = spread(table(spark, sf_dir, "orders"), "o_orderkey", key=f"{sf_dir}:orders")
+    orders = spread(table(spark, sf_dir, "orders"), "o_orderkey")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )

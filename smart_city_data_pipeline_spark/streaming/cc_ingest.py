@@ -54,7 +54,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from smart_city_data_pipeline_spark.catalog import release_checkpoint
-from smart_city_data_pipeline_spark.operators.dedup import star_cc_labels
+from smart_city_data_pipeline_spark.operators.dedup import (
+    CLUSTER_MAX_ITERS,
+    star_cc_labels,
+)
 from smart_city_data_pipeline_spark.sources import maintenance
 from smart_city_data_pipeline_spark.streaming.warehouse_sink import (
     stream_to_warehouse,
@@ -103,9 +106,13 @@ def resolve_labels(
     lab = lab.select("node", "root")
     rm = _read_lake(spark, root.rstrip("/") + "/remap", REMAP_SCHEMA, upto)
     if rm is not None and not rm.isEmpty():
-        closure, _, _ = star_cc_labels(
+        closure, _, converged = star_cc_labels(
             spark, rm.select("old_root", "new_root")
         )
+        if not converged:
+            raise RuntimeError(
+                f"remap closure hit the {CLUSTER_MAX_ITERS}-round cap"
+            )
         fix = closure.select(
             F.col("node").alias("root"), F.col("comp").alias("final")
         )
@@ -147,7 +154,11 @@ def ingest_edges_micro_batch(
         )
         .filter(F.col("x") != F.col("y"))
     )
-    labels, _, _ = star_cc_labels(spark, merge_pairs)
+    labels, _, converged = star_cc_labels(spark, merge_pairs)
+    if not converged:
+        raise RuntimeError(
+            f"batch {batch_id} merge hit the {CLUSTER_MAX_ITERS}-round cap"
+        )
     mapping = labels.localCheckpoint(eager=True)
     release_checkpoint(labels)
     # demoted existing roots -> remap rows (new_root < old_root by the

@@ -1,26 +1,23 @@
-"""k-core peeling vs a sequential python reference, the fused
-all-k peel loop, the KCORE_ROUNDS convergence-headroom contract and a
-job-count guard on the query."""
+"""k-core peeling vs a sequential python reference: the per-label
+kernel's core-node helper without Spark, the query on hand-made edge
+frames, the oracle's fixpoint peel CTE in DuckDB, and a job-count guard
+on the query."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
-from pyspark.sql import functions as F
 
+from smart_city_data_pipeline_spark.operators import dedup
 from smart_city_data_pipeline_spark.operators.similarity import (
-    KCORE_KS,
-    KCORE_ROUNDS,
-    _kcore_census,
-    _peel_cores,
-    _peel_edges,
+    _core_nodes,
+    _kcore_core_sql,
     kcore_decompose,
 )
 
 # Spark jobs of one kcore_decompose construct plus noop execute on the
-# test lake: 15 + 3 with the fused peel loop and the single-aggregate
-# census (one loop per k with a count() probe per round and the
-# four-way census took 20 + 7).
-KCORE_JOBS_MAX = 18
+# test lake with the per-label kernel; a driver-side peel loop took 18.
+KCORE_JOBS_MAX = 8
 
 
 def _py_peel(edges: list[tuple[int, int]], k: int) -> tuple[set[tuple[int, int]], int]:
@@ -44,6 +41,12 @@ def _py_kcore(edges: list[tuple[int, int]], k: int) -> set[tuple[int, int]]:
     return _py_peel(edges, k)[0]
 
 
+def _core_edges(edges: list[tuple[int, int]], k: int) -> set[tuple[int, int]]:
+    """The k-core's edges: the edges between the helper's core nodes."""
+    nodes = _core_nodes(edges, k)
+    return {(u, v) for u, v in edges if u in nodes and v in nodes}
+
+
 # Planted graph: a 4-clique (3-core), a triangle hanging off it via one
 # bridge edge (2-core), and a pendant chain (coreness 1, peels away in
 # several rounds — exercises the iteration, not just one pass).
@@ -53,78 +56,88 @@ PLANTED = [
     (12, 20), (20, 21), (21, 22), (22, 23),          # pendant chain
 ]
 
+# A triangle with a 30-edge pendant chain: a synchronous peel removes
+# one chain edge a round, so it needs 31 rounds to reach the 2-core.
+PENDANT = [(100, 101), (100, 102), (101, 102)] + [
+    (102 + i, 103 + i) for i in range(30)
+]
 
-def _planted_df(spark):
-    return spark.createDataFrame(
-        [(0, u, v) for u, v in PLANTED], ["label", "u", "v"]
-    )
+
+def _kcore_on(spark, monkeypatch, labelled: list[tuple[int, int, int]]):
+    """``kcore_decompose`` over a hand-made ``(label, u, v)`` edge list
+    in place of the near-dup graph."""
+    frame = spark.createDataFrame(labelled, "label int, vec_a long, vec_b long")
+    monkeypatch.setattr(dedup, "embedding_neardup", lambda spark, sf_dir: frame)
+    return kcore_decompose(spark, "unused")
 
 
 @pytest.mark.parametrize("k", [2, 3])
-def test_peel_matches_python_reference(spark, k):
-    got = {
-        (r["u"], r["v"]) for r in _peel_edges(_planted_df(spark), k).collect()
-    }
-    assert got == _py_kcore(PLANTED, k)
+def test_peel_matches_python_reference(k):
+    assert _core_edges(PLANTED, k) == _py_kcore(PLANTED, k)
 
 
-def test_planted_core_membership(spark):
-    df = _planted_df(spark)
-    core2 = _peel_edges(df, 2)
-    nodes2 = {
-        r["n"]
-        for r in core2.select(F.col("u").alias("n"))
-        .unionAll(core2.select(F.col("v").alias("n")))
-        .distinct()
-        .collect()
-    }
+def test_planted_core_membership():
     # chain peels away entirely; clique + triangle stay, and so does the
     # bridge edge (4, 10): both of its ends keep degree >= 2
-    assert nodes2 == {1, 2, 3, 4, 10, 11, 12}
-    core3 = _peel_edges(df, 3)
-    nodes3 = {
-        r["n"]
-        for r in core3.select(F.col("u").alias("n"))
-        .unionAll(core3.select(F.col("v").alias("n")))
-        .distinct()
-        .collect()
-    }
-    assert nodes3 == {1, 2, 3, 4}
+    assert _core_nodes(PLANTED, 2) == {1, 2, 3, 4, 10, 11, 12}
+    assert _core_nodes(PLANTED, 3) == {1, 2, 3, 4}
 
 
-def test_fused_slices_match_python_reference(spark):
-    cores, _ = _peel_cores(_planted_df(spark))
-    for k in KCORE_KS:
-        got = {
-            (r["u"], r["v"]) for r in cores.filter(F.col("k") == k).collect()
-        }
-        assert got == _py_kcore(PLANTED, k), f"k={k}"
+def test_fused_slices_match_python_reference():
+    """The kernel peels every k from the same edge list."""
+    for edges in (PLANTED, PENDANT):
+        for k in (2, 3):
+            assert _core_edges(edges, k) == _py_kcore(edges, k), f"k={k}"
 
 
 def test_core3_of_core2_is_core3():
     """k-cores are unique and nested: the DuckDB oracle peels the
-    3-core from the 2-core while Spark peels it from the whole graph."""
+    3-core from the 2-core while the kernel peels it from the whole
+    graph."""
     assert _py_kcore(sorted(_py_kcore(PLANTED, 2)), 3) == _py_kcore(PLANTED, 3)
+    assert _core_nodes(sorted(_core_edges(PLANTED, 2)), 3) == _core_nodes(PLANTED, 3)
 
 
-def test_fused_rounds_are_the_largest_reference_rounds(spark):
-    """One loop peels every k: it runs as many rounds as the slowest k
-    needs, confirming round included, not the sum over k."""
-    _, rounds = _peel_cores(_planted_df(spark))
-    per_k = [_py_peel(PLANTED, k)[1] for k in KCORE_KS]
-    assert per_k == [5, 3]  # the pendant chain peels one edge a round
-    assert rounds == max(per_k)
+def test_pendant_chain_peels_to_fixpoint(spark, monkeypatch):
+    """A chain longer than any round cap peels away on every path: the
+    helper, the Spark query and the oracle's peel CTE all give the
+    triangle as the 2-core and an empty 3-core."""
+    core2, rounds = _py_peel(PENDANT, 2)
+    assert core2 == {(100, 101), (100, 102), (101, 102)} and rounds == 31
+    assert not _py_kcore(PENDANT, 3)
+    for k in (2, 3):
+        assert _core_edges(PENDANT, k) == _py_kcore(PENDANT, k)
+
+    labelled = [(0, u, v) for u, v in PLANTED] + [(1, u, v) for u, v in PENDANT]
+    rows = {
+        r["label"]: tuple(r)[1:]
+        for r in _kcore_on(spark, monkeypatch, labelled).collect()
+    }
+    assert rows == {0: (11, 14, 7, 4), 1: (33, 33, 3, 0)}
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE g (label INT, u BIGINT, v BIGINT)")
+        con.executemany("INSERT INTO g VALUES (?, ?, ?)", labelled)
+        for k in (2, 3):
+            got = con.execute(
+                f"WITH RECURSIVE {_kcore_core_sql('core', 'g', k)}"
+                " SELECT u, v FROM core WHERE label = 1"
+            ).fetchall()
+            assert set(got) == _py_kcore(PENDANT, k), f"k={k}"
+    finally:
+        con.close()
 
 
-def test_bare_path_label_counts_zero_cores(spark):
+def test_bare_path_label_counts_zero_cores(spark, monkeypatch):
     """A label whose graph is a bare path has empty 2- and 3-cores: its
     census row reads 0, not NULL, beside a label that has both cores."""
     path = [(1, 2), (2, 3), (3, 4), (4, 5)]
-    df = spark.createDataFrame(
+    out = _kcore_on(
+        spark,
+        monkeypatch,
         [(0, u, v) for u, v in PLANTED] + [(1, u, v) for u, v in path],
-        "label int, u long, v long",
     )
-    out = _kcore_census(df)
     rows = {r["label"]: tuple(r)[1:] for r in out.collect()}
     assert rows == {0: (11, 14, 7, 4), 1: (5, 4, 0, 0)}
     expected = [
@@ -138,25 +151,9 @@ def test_bare_path_label_counts_zero_cores(spark):
     assert not any(f.nullable for f in out.schema.fields[1:])
 
 
-def test_rounds_headroom(spark, sf_dir):
-    """The real near-dup graph must converge well inside KCORE_ROUNDS
-    (the oracle replays exactly KCORE_ROUNDS rounds — agreement needs
-    the fixpoint reached within the cap). Measured on the shipped loop,
-    every k at once."""
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        embedding_neardup,
-    )
-
-    edges = embedding_neardup(spark, sf_dir).select(
-        "label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    )
-    _, rounds = _peel_cores(edges)
-    assert rounds * 2 <= KCORE_ROUNDS, f"converged in {rounds}, cap {KCORE_ROUNDS}"
-
-
 def test_kcore_job_count(spark, sf_dir, count_jobs):
     """One construct plus execute stays within the recorded job count:
-    a per-k loop or a separate count probe per round would exceed it."""
+    a driver-side peel loop would exceed it."""
     jobs = count_jobs(
         lambda: kcore_decompose(spark, sf_dir)
         .write.format("noop")

@@ -16,6 +16,11 @@ from smart_city_data_pipeline_spark.operators.similarity import (
 
 DIM = 64
 
+# Spark jobs of one mmr_diverse_select construct plus noop execute on
+# the test lake: one corpus-scan checkpoint per pick except the last,
+# whose state nothing reads (building it took 17).
+MMR_JOBS_MAX = 16
+
 
 def _q(v):
     return [math.floor(x * KMEANS_SCALE + 0.5) for x in v]
@@ -98,3 +103,14 @@ def test_mmr_matches_replay_and_skips_the_near_duplicate(spark, tmp_path):
     assert order[0] == 1
     assert order[1] == 4
     assert 2 in order[2:]
+
+
+def test_mmr_job_count(spark, sf_dir, count_jobs):
+    """No state is built after the last pick."""
+    jobs = count_jobs(
+        lambda: mmr_diverse_select(spark, sf_dir)
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    assert 0 < jobs <= MMR_JOBS_MAX, f"{jobs} jobs, recorded {MMR_JOBS_MAX}"

@@ -41,13 +41,16 @@ def _python_cc(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
+CHAIN_N = 64
+CHAIN = [(i, i + 1) for i in range(100, 100 + CHAIN_N - 1)]
+
+
 def test_chain_converges_under_log_rounds(spark):
     """A 64-node chain (diameter 63): min-label propagation moves the
     min ONE hop per round, so it needs 63 rounds — over the 20-round
     cap — while star alternation lands in <=9 rounds (2*log2(64)-ish),
     every node labelled with the chain head."""
-    n = 64
-    chain = [(i, i + 1) for i in range(100, 100 + n - 1)]
+    n, chain = CHAIN_N, CHAIN
     pairs = spark.createDataFrame(chain, "src bigint, dst bigint")
     labels, rounds, converged = star_cc_labels(spark, pairs)
     assert converged
@@ -109,3 +112,17 @@ def test_dedup_clusters_matches_oracle(spark, duck, sf_dir):
     )
     want = sorted(tuple(r) for r in duck.execute(ORACLES["dedup_clusters"]).fetchall())
     assert got == want
+
+
+def test_dedup_clusters_raises_at_round_cap(spark, sf_dir):
+    """A star-CC loop stopped by its cap is an error, not a result: the
+    63-diameter chain does not converge in one round, and does at the
+    default cap."""
+    pairs = spark.createDataFrame(CHAIN, "src bigint, dst bigint")
+    with pytest.raises(RuntimeError, match="1-round cap"):
+        dedup_clusters(spark, sf_dir, max_iters=1, pairs=pairs)
+    out = dedup_clusters(spark, sf_dir, pairs=pairs).filter(
+        F.col("doc_id").between(100, 100 + CHAIN_N - 1)
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    assert got == {i: 100 for i in range(100, 100 + CHAIN_N)}
