@@ -1131,10 +1131,10 @@ def star_cc_labels(
     larger→smaller invariant, so every intermediate state is a valid
     contraction; the unique fixpoint is a star forest rooted at each
     component's minimum node. Convergence probe: the stepped edge set
-    equals the previous one — two ``exceptAll(...).isEmpty()``
-    anti-join scalars per round over the two checkpointed sets (same
-    driver-scalar discipline as the old min-label probe; never a data
-    collect). Labels are then one min-aggregate over the converged
+    equals the previous one — per round, one ``count()`` of the stepped
+    set against the previous count carried forward, and one
+    ``exceptAll(...).isEmpty()`` anti-join scalar over the two
+    checkpointed sets (driver scalars only; never a data collect). Labels are then one min-aggregate over the converged
     star edges (roots never appear as a source; callers coalesce them
     to themselves).
 

@@ -14,6 +14,7 @@ Vector math is JVM-side (``zip_with``/``aggregate``) — see
 
 from __future__ import annotations
 
+import collections
 import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -121,6 +122,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Fixed-round definitions, not fixpoint caps: ANN_KMEANS_ITERS,
+# PCA_ITERS, BFS_MAX_LEVEL, LP_ROUNDS, PR_ROUNDS and HITS_ROUNDS each
+# define their algorithm by a round count that both engines replay, so
+# stopping there is the result, not a loop cut short.
 ANN_KMEANS_K = 16
 ANN_KMEANS_ITERS = 2
 ANN_KMEANS_NPROBE = 2
@@ -2378,11 +2383,52 @@ def _cluster_label_nmi_oracle_sql() -> str:
 ORACLES["cluster_label_nmi"] = _cluster_label_nmi_oracle_sql()
 
 
-# k-core peeling: drop every node of degree < k until none is left.
-# Each label's graph peels on its own, so the Spark query peels inside
-# one pandas kernel per label and the DuckDB oracle runs each label's
-# recursive CTE until a round removes nothing. Neither side has a round
-# cap: a pendant chain of any length peels to the true fixpoint.
+# The near-dup graph's per-label queries (k-core, BFS levels, label
+# propagation) run one pure-Python kernel per label: each label's graph
+# is small and bounded (at sf0.1, 1449 edges in 10 labels, at most 183
+# in one label), so a Spark round loop over it is all driver overhead.
+# The label vocabulary is fixed, so the groups do not multiply with the
+# data. The kernels are functions of an edge list that tests call
+# without Spark; the DuckDB oracles recompute each in SQL.
+
+
+def _adjacency(edges: list[tuple[int, int]]) -> dict[int, list[int]]:
+    """Neighbour lists of an undirected edge list, one entry per edge
+    end, as the oracles' joins over the symmetric edge table count."""
+    adj: dict[int, list[int]] = {}
+    for u, v in edges:
+        adj.setdefault(u, []).append(v)
+        adj.setdefault(v, []).append(u)
+    return adj
+
+
+def _per_label(spark: SparkSession, sf_dir: str, kernel, schema: str) -> DataFrame:
+    """The near-dup ``(label, u, v)`` edges through
+    ``groupBy("label").applyInPandas``: ``kernel(edges)`` maps one
+    label's edge list to its output rows, and the label leads each row.
+    Bound: one label's edge list must fit in one Python worker."""
+    from smart_city_data_pipeline_spark.operators.dedup import (
+        embedding_neardup,
+    )
+
+    def run(key, pdf):
+        import pandas as pd
+
+        edges = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+        return pd.DataFrame([(*key, *row) for row in kernel(edges)])
+
+    return (
+        embedding_neardup(spark, sf_dir)
+        .select("label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
+        .groupBy("label")
+        .applyInPandas(run, schema)
+    )
+
+
+# k-core peeling: drop every node of degree < k until none is left. The
+# DuckDB oracle runs each label's recursive CTE until a round removes
+# nothing. Neither side has a round cap: a pendant chain of any length
+# peels to the true fixpoint.
 
 
 def _core_nodes(edges: list[tuple[int, int]], k: int) -> set[int]:
@@ -2390,10 +2436,7 @@ def _core_nodes(edges: list[tuple[int, int]], k: int) -> set[int]:
     peel of Batagelj & Zaversnik (2003): a node whose degree falls
     below k leaves and lowers each neighbour's degree, in O(m). Degree
     counts edge ends, as the oracle's ``COUNT(*)`` does."""
-    adj: dict[int, list[int]] = {}
-    for u, v in edges:
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
+    adj = _adjacency(edges)
     deg = {n: len(ns) for n, ns in adj.items()}
     queue = [n for n, d in deg.items() if d < k]
     gone = set(queue)
@@ -2418,51 +2461,38 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity (partition quality) with the classic GLOBAL density
     hierarchy (Seidman 1983).
 
-    One lazy plan: the ``(label, u, v)`` near-dup edges go through
-    ``groupBy("label").applyInPandas``, and each label's kernel peels
-    its 2-core and 3-core with :func:`_core_nodes` to the true fixpoint
-    and returns that label's census row. Counts are ``bigint not
-    null``: a label whose core is empty reads 0.
+    One lazy plan through :func:`_per_label`: each label's kernel
+    peels its 2-core and 3-core with :func:`_core_nodes` to the true
+    fixpoint and returns that label's census row. Counts are ``bigint
+    not null``: a label whose core is empty reads 0.
 
-    Bound: one label's edge list must fit in one Python worker. The
-    label vocabulary is fixed, so the groups do not multiply with the
-    data; at sf0.1 there are 1449 edges in 10 labels, at most 183 in
-    one label. A vertex-centric Spark peel (Montresor et al., TPDS
-    2013) pays off only for a single graph larger than one task, and
-    costs one driver round trip per peel round.
+    Bound: one label's edge list must fit in one Python worker. A
+    vertex-centric Spark peel (Montresor et al., TPDS 2013) pays off
+    only for a single graph larger than one task, and costs one driver
+    round trip per peel round.
 
     The DuckDB oracle peels each label with a recursive CTE that stops
     once a round removes nothing, and peels the 3-core from the 2-core.
     The two agree: k-cores are unique and nested, so the 3-core of G
     is the 3-core of its 2-core.
     """
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        embedding_neardup,
-    )
 
-    def census(key, pdf):
-        import pandas as pd
+    def census(edges):
+        return [
+            (
+                len(_adjacency(edges)),
+                len(edges),
+                len(_core_nodes(edges, 2)),
+                len(_core_nodes(edges, 3)),
+            )
+        ]
 
-        edges = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
-        return pd.DataFrame(
-            {
-                "label": [key[0]],
-                "n_nodes": [len(set(pdf["u"]).union(pdf["v"]))],
-                "n_edges": [len(edges)],
-                "core2_nodes": [len(_core_nodes(edges, 2))],
-                "core3_nodes": [len(_core_nodes(edges, 3))],
-            }
-        )
-
-    return (
-        embedding_neardup(spark, sf_dir)
-        .select("label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
-        .groupBy("label")
-        .applyInPandas(
-            census,
-            "label int, n_nodes bigint not null, n_edges bigint not null,"
-            " core2_nodes bigint not null, core3_nodes bigint not null",
-        )
+    return _per_label(
+        spark,
+        sf_dir,
+        census,
+        "label int, n_nodes bigint not null, n_edges bigint not null,"
+        " core2_nodes bigint not null, core3_nodes bigint not null",
     )
 
 
@@ -3040,6 +3070,23 @@ ORACLES["retrieval_metrics_report"] = _retrieval_metrics_oracle_sql()
 BFS_MAX_LEVEL = 3  # bounded-depth census (the dup-neighborhood radius)
 
 
+def _bfs_level_counts(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Nodes per hop distance from the smallest node of an undirected
+    edge list, out to ``BFS_MAX_LEVEL`` hops: a breadth-first walk that
+    stops expanding at that depth."""
+    adj = _adjacency(edges)
+    dist = {min(adj): 0}
+    queue = collections.deque(dist)
+    while queue:
+        n = queue.popleft()
+        if dist[n] < BFS_MAX_LEVEL:
+            for m in adj[n]:
+                if m not in dist:
+                    dist[m] = dist[n] + 1
+                    queue.append(m)
+    return collections.Counter(dist.values())
+
+
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS distance census over the near-dup graph: from each label's
     CANONICAL node (lowest vec_id — the doc a dedup pass would keep),
@@ -3049,77 +3096,35 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-deletes (long chains; compare ``kcore_decompose``'s density
     view and ``dedup_clusters``' full components).
 
-    Spark-first BFS: frontier expansion with an anti-join against the
-    visited set per level — O(edges) per level, LEVELS bounded at 3,
-    every join keyed on (label, node); no path enumeration. The
-    DuckDB oracle instead enumerates walks with a depth-capped
-    recursive CTE and takes MIN(level) per node — the SPEC form
-    (exponential in depth, fine at the gate's scale) checking the
-    efficient frontier implementation.
+    One lazy plan through :func:`_per_label`: each label's kernel walks
+    its graph with :func:`_bfs_level_counts` and returns one row per
+    level that holds a node. Bound: one label's edge list must fit in
+    one Python worker, as for ``kcore_decompose``. The DuckDB oracle
+    instead enumerates walks with a depth-capped recursive CTE and
+    takes MIN(level) per node — the SPEC form (exponential in depth,
+    fine at the gate's scale) checking the breadth-first kernel.
 
     Integer counts end-to-end."""
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        embedding_neardup,
-    )
-
-    e0 = embedding_neardup(spark, sf_dir).select(
-        "label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    )
-    edges = (
-        e0.unionAll(
-            e0.select("label", F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .localCheckpoint(eager=False)
-    )
-    nodes = edges.select("label", F.col("u").alias("node")).distinct()
-    seeds = nodes.groupBy("label").agg(F.min("node").alias("node"))
-    visited = seeds.select("label", "node", F.lit(0).alias("lvl"))
-    frontier = visited
-    hop = edges.select(
-        "label", F.col("u").alias("node"), F.col("v").alias("nbr")
-    )
-    for lvl in range(1, BFS_MAX_LEVEL + 1):
-        nxt = (
-            frontier.select("label", "node")
-            .join(hop, ["label", "node"])
-            .select("label", F.col("nbr").alias("node"))
-            .distinct()
-            .join(visited.select("label", "node"), ["label", "node"], "left_anti")
-            .select("label", "node", F.lit(lvl).alias("lvl"))
-            .localCheckpoint(eager=False)
-        )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return visited.groupBy("label", "lvl").agg(
-        F.count(F.lit(1)).alias("n_nodes")
+    return _per_label(
+        spark,
+        sf_dir,
+        lambda edges: _bfs_level_counts(edges).items(),
+        "label int, lvl int not null, n_nodes bigint not null",
     )
 
 
 QUERIES["graph_bfs_levels"] = graph_bfs_levels
 
 
-def _bfs_oracle_sql() -> str:
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        COSINE_NEARDUP_THRESHOLD,
-    )
-
+def _bfs_census_sql(src: str) -> str:
+    """The BFS census over the ``(label, u, v)`` half-edges of ``src``:
+    the CTEs that walk each label from its smallest node, then the
+    census SELECT."""
     return f"""
-        WITH RECURSIVE emb AS (
-            SELECT vec_id, label, embedding,
-                   sqrt({dot_sql('embedding', 'embedding')}) AS nrm
-            FROM embeddings
-        ),
-        half AS MATERIALIZED (
-            SELECT a.label, a.vec_id AS u, b.vec_id AS v
-            FROM emb a
-            JOIN emb b ON a.label = b.label AND a.vec_id < b.vec_id
-            WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
-                  >= {COSINE_NEARDUP_THRESHOLD}
-        ),
         edges AS MATERIALIZED (
-            SELECT label, u, v FROM half
+            SELECT label, u, v FROM {src}
             UNION ALL
-            SELECT label, v, u FROM half
+            SELECT label, v, u FROM {src}
         ),
         seeds AS (
             SELECT label, MIN(u) AS node FROM edges GROUP BY 1
@@ -3141,92 +3146,7 @@ def _bfs_oracle_sql() -> str:
     """
 
 
-ORACLES["graph_bfs_levels"] = _bfs_oracle_sql()
-
-
-LP_ROUNDS = 4  # synchronous label-propagation rounds (deterministic)
-
-
-def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation (Raghavan
-    et al. 2007) over the near-dup graph — the community view between
-    connected components (``dedup_clusters``: too coarse, one giant
-    component absorbs chains) and k-core density (no membership).
-    Deterministic variant: every node starts as its own label; each
-    round every node adopts the (count, label)-max label among its
-    neighbors' current labels (struct-max — most frequent, ties to the
-    LARGER label id, no randomness); exactly LP_ROUNDS synchronous
-    rounds in BOTH engines (LPA has no convergence guarantee —
-    oscillation is broken by the fixed round count, identical on both
-    sides). Output: per community, size and member span.
-
-    Shape: each round is one join (neighbor labels) + one keyed
-    aggregate — the dedup_clusters iteration discipline with
-    localCheckpoint lineage breaks; the oracle replays the identical
-    rounds as a recursive CTE carrying (node, label) state."""
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        embedding_neardup,
-    )
-
-    e0 = embedding_neardup(spark, sf_dir).select(
-        "label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    )
-    edges = (
-        e0.unionAll(
-            e0.select("label", F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .withColumnRenamed("label", "part")
-        .localCheckpoint(eager=False)
-    )
-    state = (
-        edges.select("part", F.col("u").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(LP_ROUNDS):
-        nbr = edges.join(
-            state.select(
-                "part", F.col("node").alias("v"), F.col("lbl").alias("nlbl")
-            ),
-            ["part", "v"],
-        )
-        votes = nbr.groupBy("part", "u", "nlbl").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        # argmax by (c, nlbl) packed into ONE DECIMAL(38,0):
-        # max(struct(...)) is not hash-aggregable, so the struct
-        # spelling planned Sort + SortAggregate over the votes table
-        # EVERY round. c·2⁶⁴ + nlbl orders exactly like (c, nlbl)
-        # for any 64-bit label id (nlbl ∈ [0, 2⁶³)) and any count up
-        # to ~5.4·10¹⁸ — no id-width cap at 100 TB; the label comes
-        # back out as pack mod 2⁶⁴.
-        pack = F.expr(
-            "CAST(c AS DECIMAL(38,0)) * 18446744073709551616 + nlbl"
-        )
-        state = (
-            votes.groupBy("part", F.col("u").alias("node"))
-            .agg(F.max(pack).alias("mx"))
-            .select(
-                "part",
-                "node",
-                F.expr(
-                    "CAST(mx % 18446744073709551616 AS BIGINT)"
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return state.groupBy("part", F.col("lbl").alias("community")).agg(
-        F.count(F.lit(1)).alias("size"),
-        F.min("node").alias("min_member"),
-        F.max("node").alias("max_member"),
-    )
-
-
-QUERIES["label_propagation_communities"] = label_propagation_communities
-
-
-def _lp_oracle_sql() -> str:
+def _bfs_oracle_sql() -> str:
     from smart_city_data_pipeline_spark.operators.dedup import (
         COSINE_NEARDUP_THRESHOLD,
     )
@@ -3238,16 +3158,86 @@ def _lp_oracle_sql() -> str:
             FROM embeddings
         ),
         half AS MATERIALIZED (
-            SELECT a.label AS part, a.vec_id AS u, b.vec_id AS v
+            SELECT a.label, a.vec_id AS u, b.vec_id AS v
             FROM emb a
             JOIN emb b ON a.label = b.label AND a.vec_id < b.vec_id
             WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
                   >= {COSINE_NEARDUP_THRESHOLD}
         ),
+        {_bfs_census_sql('half')}
+    """
+
+
+ORACLES["graph_bfs_levels"] = _bfs_oracle_sql()
+
+
+LP_ROUNDS = 4  # synchronous label-propagation rounds (deterministic)
+
+
+def _lp_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Each node's label after ``LP_ROUNDS`` synchronous rounds of label
+    propagation over an undirected edge list: every node starts as its
+    own label, and each round every node adopts the label most frequent
+    among its neighbours' current labels, a tie going to the larger
+    label."""
+    adj = _adjacency(edges)
+    lbl = {n: n for n in adj}
+    for _ in range(LP_ROUNDS):
+        lbl = {
+            n: max(
+                (c, m) for m, c in collections.Counter(lbl[x] for x in ns).items()
+            )[1]
+            for n, ns in adj.items()
+        }
+    return lbl
+
+
+def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection by synchronous label propagation (Raghavan
+    et al. 2007) over the near-dup graph — the community view between
+    connected components (``dedup_clusters``: too coarse, one giant
+    component absorbs chains) and k-core density (no membership).
+    Deterministic variant (:func:`_lp_labels`): every node starts as
+    its own label; each round every node adopts the (count, label)-max
+    label among its neighbors' current labels (most frequent, ties to
+    the LARGER label id, no randomness); exactly LP_ROUNDS synchronous
+    rounds in BOTH engines (LPA has no convergence guarantee —
+    oscillation is broken by the fixed round count, identical on both
+    sides). Output: per community, size and member span.
+
+    One lazy plan through :func:`_per_label`: each label's kernel runs
+    the rounds and returns one row per community. Bound: one label's
+    edge list must fit in one Python worker, as for
+    ``kcore_decompose``. The oracle replays the identical rounds as a
+    recursive CTE carrying (node, label) state."""
+
+    def communities(edges):
+        members: dict[int, list[int]] = {}
+        for node, lbl in _lp_labels(edges).items():
+            members.setdefault(lbl, []).append(node)
+        return [(c, len(ns), min(ns), max(ns)) for c, ns in members.items()]
+
+    return _per_label(
+        spark,
+        sf_dir,
+        communities,
+        "part int, community bigint, size bigint not null,"
+        " min_member bigint, max_member bigint",
+    )
+
+
+QUERIES["label_propagation_communities"] = label_propagation_communities
+
+
+def _lp_communities_sql(src: str) -> str:
+    """Label propagation over the ``(part, u, v)`` half-edges of
+    ``src``: the CTEs that replay the ``LP_ROUNDS`` rounds, then the
+    per-community SELECT."""
+    return f"""
         edges AS MATERIALIZED (
-            SELECT part, u, v FROM half
+            SELECT part, u, v FROM {src}
             UNION ALL
-            SELECT part, v, u FROM half
+            SELECT part, v, u FROM {src}
         ),
         lp(t, part, node, lbl) AS (
             SELECT 0, part, u, u FROM (SELECT DISTINCT part, u FROM edges)
@@ -3270,6 +3260,28 @@ def _lp_oracle_sql() -> str:
                CAST(MAX(node) AS BIGINT) AS max_member
         FROM lp WHERE t = {LP_ROUNDS}
         GROUP BY 1, 2
+    """
+
+
+def _lp_oracle_sql() -> str:
+    from smart_city_data_pipeline_spark.operators.dedup import (
+        COSINE_NEARDUP_THRESHOLD,
+    )
+
+    return f"""
+        WITH RECURSIVE emb AS (
+            SELECT vec_id, label, embedding,
+                   sqrt({dot_sql('embedding', 'embedding')}) AS nrm
+            FROM embeddings
+        ),
+        half AS MATERIALIZED (
+            SELECT a.label AS part, a.vec_id AS u, b.vec_id AS v
+            FROM emb a
+            JOIN emb b ON a.label = b.label AND a.vec_id < b.vec_id
+            WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
+                  >= {COSINE_NEARDUP_THRESHOLD}
+        ),
+        {_lp_communities_sql('half')}
     """
 
 
@@ -3523,9 +3535,12 @@ def knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the kNN edge set is built ONCE (band-bounded, never
     O(n²)) and checkpointed with its out-degrees; each round is one
     keyed join (mass onto edges) + one keyed integer aggregate + one
-    left join back onto the node list — the ``dedup_clusters`` bounded
-    driver-loop discipline with lazy localCheckpoint lineage breaks.
-    O(PR_ROUNDS) rounds, independent of graph shape.
+    left join back onto the node list. The kNN graph is global, not
+    per label, so it keeps its Spark loop: O(PR_ROUNDS) rounds,
+    independent of graph shape. Each round's state is an eager
+    checkpoint that frees its predecessor once materialized; the
+    edges-with-degree checkpoint is freed before returning, so only
+    the final state and the edge list the result reads stay.
     """
     from smart_city_data_pipeline_spark.operators.dedup import knn_graph
 
@@ -3542,8 +3557,9 @@ def knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("node"))
     state = nodes.select(
         "node", F.lit(PR_Q).cast(d).alias("r")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     for _ in range(PR_ROUNDS):
+        prev = state
         contrib = ed.join(
             state.select(F.col("node").alias("u"), "r"), "u"
         ).select(
@@ -3564,8 +3580,10 @@ def knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f" DIV CAST(100 AS {d}) AS {d})"
                 ).alias("r"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
+        release_checkpoint(prev)
+    release_checkpoint(ed)
     return (
         state.join(deg, state["node"] == deg["u"], "left")
         .select(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from smart_city_data_pipeline_spark.catalog import release_checkpoint, table
+from smart_city_data_pipeline_spark.catalog import table
 from smart_city_data_pipeline_spark.functions.rounding import (
     avg_exact,
     avg_exact_sql,
@@ -830,8 +830,28 @@ ORACLES["pareto_front"] = f"""
 
 DBSCAN_CELL = 500  # grid cell side on the 10000x10000 layout plane
 DBSCAN_MINPTS = 2  # points for a cell to count as dense
-DBSCAN_MAX_ITERS = 64  # CC runaway guard (dense regions are shallow)
-DBSCAN_ROUNDS_PER_PROBE = 2  # doubled (propagate+jump) rounds per probe
+
+
+def _cell_components(cells: list[tuple[int, int, int]]) -> list[tuple[int, int, int]]:
+    """``(cx, cy, cluster_id)`` for each ``(cx, cy, lbl)`` dense cell:
+    a flood fill over the 8-neighbourhood gives each component the
+    minimum ``lbl`` of its cells."""
+    lbl = {(cx, cy): c for cx, cy, c in cells}
+    comp: dict[tuple[int, int], int] = {}
+    for start in lbl:
+        if start in comp:
+            continue
+        members, stack = {start}, [start]
+        while stack:
+            cx, cy = stack.pop()
+            for dx in (-1, 0, 1):
+                for dy in (-1, 0, 1):
+                    nb = (cx + dx, cy + dy)
+                    if nb in lbl and nb not in members:
+                        members.add(nb)
+                        stack.append(nb)
+        comp.update(dict.fromkeys(members, min(lbl[c] for c in members)))
+    return [(cx, cy, comp[(cx, cy)]) for cx, cy, _ in cells]
 
 
 def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,44 +868,32 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     step of the exact distributed algorithms.
 
     Scale shape: density is ONE keyed aggregate over the point→cell
-    projection; dense-cell adjacency is an EQUI-join on shifted cell
-    keys (9 literal offsets exploded — never a pairwise distance
-    join); the components loop is iterative min-label propagation
-    over DENSE CELLS ONLY (the ``dedup_clusters`` discipline:
-    per-round localCheckpoint, driver-side scalar convergence probe,
-    O(region diameter) rounds) — the loop working set is occupied
-    cells, orders of magnitude below points. Border/noise assignment
-    is one more shifted-key join from the point side.
+    projection. The dense-cell table goes to one pandas kernel group,
+    which labels each 8-neighbour component with its minimum cell
+    ``lbl`` (:func:`_cell_components`) in one pass, whatever the
+    component's diameter. Bound: non-negative sensor ids land on the
+    10000×10000 layout plane, so there are at most
+    (10000/``DBSCAN_CELL``)² = 400 cells at any scale. Border/noise assignment is a shifted-key EQUI-join from the
+    point side (9 literal offsets exploded — never a pairwise distance
+    join).
 
     Exactness: cell coordinates, density counts, and labels are pure
-    integers; the min-label fixpoint equals min-reachable-id, which
-    the DuckDB oracle recomputes as a recursive-CTE transitive
-    closure — engine-exact with no float anywhere.
+    integers; the component label is the min-reachable-id, which the
+    DuckDB oracle recomputes as a recursive-CTE transitive closure —
+    engine-exact with no float anywhere.
     """
     ev = table(spark, sf_dir, "events")
-    pts = ev.select(F.col("user_id").alias("sensor_id")).distinct()
     px = (F.col("sensor_id") * 8191) % 10000
     py = (F.col("sensor_id") * 524287) % 10000
-    # pts (the distinct sensor fleet — bounded far below the fact
-    # stream) feeds the density aggregate, the core join and the
-    # sparse anti-join; dense (occupied dense cells) feeds the shifted
-    # self-join, the label init and the final label attach. Lazily
-    # shared, each reference re-ran the events scan + distinct (20
-    # parquet scans in the plan — guide §7.2); materialize both once.
-    pts = pts.select(
+    pts = ev.select(F.col("user_id").alias("sensor_id")).distinct().select(
         "sensor_id",
         F.floor(px / DBSCAN_CELL).cast("long").alias("cx"),
         F.floor(py / DBSCAN_CELL).cast("long").alias("cy"),
-    ).localCheckpoint(eager=True)
+    )
     cells = pts.groupBy("cx", "cy").agg(
         F.count(F.lit(1)).cast("long").alias("n_pts")
     )
     lbl = (F.col("cx") * 1024 + F.col("cy")).cast("long")
-    dense = (
-        cells.filter(F.col("n_pts") >= DBSCAN_MINPTS)
-        .select("cx", "cy", lbl.alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
     offsets = F.array(
         *[
             F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -893,80 +901,21 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             for dy in (-1, 0, 1)
         ]
     )
-    shifted = dense.select(
-        F.col("lbl").alias("src"),
-        F.explode(offsets).alias("o"),
-        "cx",
-        "cy",
-    ).select(
-        "src",
-        (F.col("cx") + F.col("o.dx")).alias("nx"),
-        (F.col("cy") + F.col("o.dy")).alias("ny"),
-    )
-    nbr = dense.select(
-        F.col("cx").alias("nx"), F.col("cy").alias("ny"), F.col("lbl").alias("dst")
-    )
-    edges = shifted.join(nbr, ["nx", "ny"]).select("src", "dst")
-    edges = edges.localCheckpoint(eager=True)
 
-    labels = dense.select(F.col("lbl").alias("node")).withColumn(
-        "comp", F.col("node")
-    )
-    # Plain neighbor propagation needs O(component DIAMETER) rounds —
-    # a dense city grid is ONE wall-to-wall component (at sf0.1, 369
-    # of 395 cells are dense), so the diameter is the grid side, not
-    # a small constant. Each round therefore does BOTH a neighbor-min
-    # step and a POINTER JUMP (comp <- comp[comp], label-tree halving)
-    # — the classic doubling trick that converges in O(log diameter)
-    # rounds; two rounds run per checkpoint/convergence-probe so the
-    # fixed per-job cost is amortized too.
-    for probe in range(DBSCAN_MAX_ITERS // (2 * DBSCAN_ROUNDS_PER_PROBE)):
-        stepped = labels.withColumn("_changed", F.lit(False))
-        for _r in range(DBSCAN_ROUNDS_PER_PROBE):
-            nbr_min = (
-                edges.join(stepped, edges.src == stepped.node)
-                .groupBy(F.col("dst").alias("nbr_node"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            new_comp = F.least(
-                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-            )
-            stepped = stepped.join(
-                nbr_min, stepped.node == F.col("nbr_node"), "left"
-            ).select(
-                "node",
-                new_comp.alias("comp"),
-                (F.col("_changed") | (new_comp != F.col("comp"))).alias(
-                    "_changed"
-                ),
-            )
-            parent = stepped.select(
-                F.col("node").alias("p_node"), F.col("comp").alias("p_comp")
-            )
-            jumped = F.least(
-                F.col("comp"), F.coalesce(F.col("p_comp"), F.col("comp"))
-            )
-            stepped = stepped.join(
-                parent, stepped.comp == parent.p_node, "left"
-            ).select(
-                "node",
-                jumped.alias("comp"),
-                (F.col("_changed") | (jumped != F.col("comp"))).alias(
-                    "_changed"
-                ),
-            )
-        stepped = stepped.localCheckpoint(eager=True)
-        if probe:  # the first labels read the dense-cell checkpoint itself
-            release_checkpoint(labels)
-        converged = stepped.filter(F.col("_changed")).isEmpty()
-        labels = stepped.drop("_changed")
-        if converged:
-            break
-    release_checkpoint(edges)
+    def components(pdf):
+        import pandas as pd
 
-    dense_lbl = dense.join(
-        labels, dense.lbl == labels.node
-    ).select("cx", "cy", F.col("comp").alias("cluster_id"))
+        rows = _cell_components(
+            list(zip(pdf["cx"].tolist(), pdf["cy"].tolist(), pdf["lbl"].tolist()))
+        )
+        return pd.DataFrame(rows, columns=["cx", "cy", "cluster_id"])
+
+    dense_lbl = (
+        cells.filter(F.col("n_pts") >= DBSCAN_MINPTS)
+        .select("cx", "cy", lbl.alias("lbl"))
+        .groupBy()
+        .applyInPandas(components, "cx long, cy long, cluster_id long")
+    )
 
     core = pts.join(dense_lbl, ["cx", "cy"]).select(
         "sensor_id", "cx", "cy", F.lit("core").alias("role"), "cluster_id"

@@ -17,11 +17,6 @@ def _pairs():
 
 KEYS, QUERIES, ORACLES = _pairs()
 
-# Their rounds are lazy checkpoints that no action materializes inside
-# the loop, so the caller's action persists them after the function has
-# returned; freeing them needs eager rounds, a performance change.
-LAZY_CHAIN_KEYS = {"graph_bfs_levels", "label_propagation_communities", "knn_pagerank"}
-
 
 def _plan_rdd_ids(sdf) -> set:
     ids = set()
@@ -42,9 +37,8 @@ def test_oracle_parity(key, spark, duck, sf_dir, persistent_rdd_ids):
     rel = duck.sql(ORACLES[key])
     verdict = compare(key, sdf, rel.fetchall(), list(rel.columns))
     assert verdict.startswith("OK"), verdict
-    if key not in LAZY_CHAIN_KEYS:
-        unread = persistent_rdd_ids() - before - _plan_rdd_ids(sdf)
-        assert not unread, f"{len(unread)} persistent RDDs the plan does not read"
+    unread = persistent_rdd_ids() - before - _plan_rdd_ids(sdf)
+    assert not unread, f"{len(unread)} persistent RDDs the plan does not read"
 
 
 def test_every_oracle_has_query():

@@ -1025,28 +1025,17 @@ def test_abtt_residual_matches_numpy_projection(spark, sf_dir):
         assert 0.0 < r["norm_reduction_share"] < 1.0
 
 
-def test_dbscan_grid_matches_bfs_reference(spark, sf_dir):
-    """Pure-python BFS over the same dense-cell adjacency — validates
-    the iterative min-label loop (component = min reachable label),
-    border assignment, and noise classification."""
+def _dbscan_bfs_reference(sensors) -> dict:
+    """Pure-python BFS over the dense-cell adjacency of ``sensors``:
+    ``sensor_id -> (role, cluster_id)``, the cluster id being the min
+    cell label of its component."""
     from collections import defaultdict, deque
-
-    import duckdb
 
     from smart_city_data_pipeline_spark.operators.traffic import (
         DBSCAN_CELL,
         DBSCAN_MINPTS,
-        dbscan_grid,
     )
 
-    con = duckdb.connect()
-    sensors = [
-        r[0]
-        for r in con.execute(
-            f"SELECT DISTINCT user_id FROM "
-            f"read_parquet('{sf_dir}/events.parquet')"
-        ).fetchall()
-    ]
     cells = defaultdict(list)
     for sid in sensors:
         cx = (sid * 8191) % 10000 // DBSCAN_CELL
@@ -1091,6 +1080,40 @@ def test_dbscan_grid_matches_bfs_reference(spark, sf_dir):
                 expected[sid] = (
                     ("border", min(nbrs)) if nbrs else ("noise", -1)
                 )
+    return expected
+
+
+def _write_fleet(spark, d: str, sids) -> None:
+    """An events lake at ``d`` with one event per sensor id."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (i, "2024-01-01 00:00:00", sid, "click", 1.0, "{}")
+        for i, sid in enumerate(sids)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
+
+
+def test_dbscan_grid_matches_bfs_reference(spark, sf_dir):
+    """Pure-python BFS over the same dense-cell adjacency — validates
+    the component kernel (component = min reachable label), border
+    assignment, and noise classification."""
+    import duckdb
+
+    from smart_city_data_pipeline_spark.operators.traffic import dbscan_grid
+
+    con = duckdb.connect()
+    sensors = [
+        r[0]
+        for r in con.execute(
+            f"SELECT DISTINCT user_id FROM "
+            f"read_parquet('{sf_dir}/events.parquet')"
+        ).fetchall()
+    ]
+    expected = _dbscan_bfs_reference(sensors)
 
     got = {
         r["sensor_id"]: (r["role"], r["cluster_id"])
@@ -1100,16 +1123,67 @@ def test_dbscan_grid_matches_bfs_reference(spark, sf_dir):
     roles = {v[0] for v in got.values()}
     # at tiny sf every cell can be a singleton — the planted test
     # below guarantees the core/border branches
-    if dense:
+    if any(role == "core" for role, _ in expected.values()):
         assert "core" in roles
     assert "noise" in roles
+
+
+def test_dbscan_grid_serpentine_component(spark, tmp_path):
+    """A serpentine chain of dense cells, five rows of the 20x20 grid
+    joined at alternate ends, is one component of diameter ~100 cells:
+    every chain point is core with the chain's min cell label. Sparse
+    points beside it are border, far ones noise."""
+    from smart_city_data_pipeline_spark.operators.traffic import (
+        DBSCAN_CELL,
+        dbscan_grid,
+    )
+
+    by_cell = {}
+    for sid in range(1, 10000):
+        cell = (
+            (sid * 8191) % 10000 // DBSCAN_CELL,
+            (sid * 524287) % 10000 // DBSCAN_CELL,
+        )
+        by_cell.setdefault(cell, []).append(sid)
+    chain = []
+    for row in range(5):
+        xs = range(20) if row % 2 == 0 else range(19, -1, -1)
+        chain += [(x, 2 * row) for x in xs]
+        if row < 4:
+            chain.append((19 if row % 2 == 0 else 0, 2 * row + 1))
+    sparse = [(10, 1), (5, 12), (15, 18)]
+    sids = [s for c in chain for s in by_cell[c][:2]]
+    sids += [by_cell[c][0] for c in sparse]
+    d = str(tmp_path / "sfd")
+    _write_fleet(spark, d, sids)
+
+    got = {
+        r["sensor_id"]: (r["role"], r["cluster_id"])
+        for r in dbscan_grid(spark, d).collect()
+    }
+    assert got == _dbscan_bfs_reference(sids)
+    assert {got[s] for c in chain for s in by_cell[c][:2]} == {("core", 0)}
+    assert [got[by_cell[c][0]][0] for c in sparse] == ["border", "noise", "noise"]
+
+
+# Spark jobs of one dbscan_grid construct plus noop execute on the test
+# lake with the component kernel (10 or 11, as broadcasts land); the
+# driver-side propagation loop took 16.
+DBSCAN_JOBS_MAX = 11
+
+
+def test_dbscan_grid_job_count(spark, sf_dir, count_jobs):
+    from smart_city_data_pipeline_spark.operators.traffic import dbscan_grid
+
+    jobs = count_jobs(
+        lambda: dbscan_grid(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    )
+    assert 0 < jobs <= DBSCAN_JOBS_MAX, f"{jobs} jobs, recorded {DBSCAN_JOBS_MAX}"
 
 
 def test_dbscan_grid_planted_clusters(spark, tmp_path):
     """Planted fleet: two adjacent dense cells merge into one
     cluster, a neighbor point is border, a far point is noise."""
-    from pyspark.sql import functions as F
-
     from smart_city_data_pipeline_spark.operators.traffic import (
         DBSCAN_CELL,
         dbscan_grid,
@@ -1146,15 +1220,8 @@ def test_dbscan_grid_planted_clusters(spark, tmp_path):
         + by_cell[border_cell][:1]
         + by_cell[far][:1]
     )
-    rows = [
-        (i, "2024-01-01 00:00:00", sid, "click", 1.0, "{}")
-        for i, sid in enumerate(sids)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
     d = str(tmp_path / "sfd")
-    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
+    _write_fleet(spark, d, sids)
 
     got = {
         r["sensor_id"]: (r["role"], r["cluster_id"])
