@@ -15,7 +15,6 @@ Vector math is JVM-side (``zip_with``/``aggregate``) — see
 from __future__ import annotations
 
 import collections
-import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -154,11 +153,13 @@ def _qvec(col) -> "F.Column":
     )
 
 
-@functools.lru_cache(maxsize=32)
-def _cents_col(cents_key: tuple) -> "F.Column":
-    """Centroid literal, built once per distinct quantizer round (a
-    16×64 nested F.lit costs ~0.5 s of py4j transport per call)."""
-    return F.lit([list(c) for c in cents_key])
+def _cents_col(cents: list) -> "F.Column":
+    """Centroid matrix as ONE ``array(array(<v>D, …), …)`` SQL literal
+    of finite doubles: same value, type and nullability as the nested
+    ``F.lit``, which makes one py4j call per element (~0.4 s for a
+    16×64 matrix against ~2 ms for the parsed expression)."""
+    rows = ("array(" + ", ".join(f"{float(v)!r}D" for v in c) + ")" for c in cents)
+    return F.expr("array(" + ", ".join(rows) + ")")
 
 
 def _l2_dists(q_col, cents: list) -> "F.Column":
@@ -166,7 +167,7 @@ def _l2_dists(q_col, cents: list) -> "F.Column":
     ||q − c||² minus the |q|² term, which is constant across cells and
     cannot change the argmin. All values are exact integers (see
     :func:`_qvec`), so the argmin and its ties are deterministic."""
-    cc = _cents_col(tuple(tuple(c) for c in cents))
+    cc = _cents_col(cents)
     c2 = F.lit([float(sum(v * v for v in c)) for c in cents])
     dots = F.transform(cc, lambda c: dot(q_col, c))
     return F.zip_with(c2, dots, lambda a, b: a - 2.0 * b)

@@ -873,9 +873,10 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lbl`` (:func:`_cell_components`) in one pass, whatever the
     component's diameter. Bound: non-negative sensor ids land on the
     10000×10000 layout plane, so there are at most
-    (10000/``DBSCAN_CELL``)² = 400 cells at any scale. Border/noise assignment is a shifted-key EQUI-join from the
-    point side (9 literal offsets exploded — never a pairwise distance
-    join).
+    (10000/``DBSCAN_CELL``)² = 400 cells at any scale. Role and label
+    come from ONE shifted-key EQUI-join from the point side (9 literal
+    offsets exploded — never a pairwise distance join) and one keyed
+    aggregate, so the kernel output is planned and read once.
 
     Exactness: cell coordinates, density counts, and labels are pure
     integers; the component label is the min-reachable-id, which the
@@ -917,44 +918,40 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandas(components, "cx long, cy long, cluster_id long")
     )
 
-    core = pts.join(dense_lbl, ["cx", "cy"]).select(
-        "sensor_id", "cx", "cy", F.lit("core").alias("role"), "cluster_id"
-    )
-    sparse_pts = pts.join(dense_lbl.select("cx", "cy"), ["cx", "cy"], "left_anti")
-    sp_shift = sparse_pts.select(
+    # The own-cell label makes a core point, else the smallest
+    # neighbouring label a border point, else noise (-1).
+    own = (F.col("o.dx") == 0) & (F.col("o.dy") == 0)
+    probed = pts.select("sensor_id", "cx", "cy", F.explode(offsets).alias("o")).select(
         "sensor_id",
         "cx",
         "cy",
-        F.explode(offsets).alias("o"),
-    ).select(
-        "sensor_id",
-        "cx",
-        "cy",
+        own.alias("own"),
         (F.col("cx") + F.col("o.dx")).alias("nx"),
         (F.col("cy") + F.col("o.dy")).alias("ny"),
     )
     dn = dense_lbl.select(
         F.col("cx").alias("nx"), F.col("cy").alias("ny"), "cluster_id"
     )
-    border = (
-        sp_shift.join(dn, ["nx", "ny"])
+    labels = (
+        probed.join(dn, ["nx", "ny"], "left")
         .groupBy("sensor_id", "cx", "cy")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-        .select(
-            "sensor_id", "cx", "cy", F.lit("border").alias("role"), "cluster_id"
+        .agg(
+            F.max(F.when(F.col("own"), F.col("cluster_id"))).alias("own_id"),
+            F.min("cluster_id").alias("nbr_id"),
         )
     )
-    noise = (
-        sparse_pts.join(border.select("sensor_id"), "sensor_id", "left_anti")
-        .select(
-            "sensor_id",
-            "cx",
-            "cy",
-            F.lit("noise").alias("role"),
-            F.lit(-1).cast("long").alias("cluster_id"),
-        )
+    core = F.col("own_id").isNotNull()
+    border = F.col("nbr_id").isNotNull()
+    return labels.select(
+        "sensor_id",
+        "cx",
+        "cy",
+        F.when(core, "core").when(border, "border").otherwise("noise").alias("role"),
+        F.when(core, F.col("own_id"))
+        .when(border, F.col("nbr_id"))
+        .otherwise(F.lit(-1).cast("long"))
+        .alias("cluster_id"),
     )
-    return core.unionByName(border).unionByName(noise)
 
 
 QUERIES["dbscan_grid"] = dbscan_grid

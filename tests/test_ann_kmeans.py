@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 from smart_city_data_pipeline_spark.operators.similarity import (
     N_PROBES,
     TOP_K,
+    _cents_col,
     _train_kmeans,
     kmeans_ivf_topk,
 )
@@ -112,3 +113,23 @@ def test_kmeans_training_ignores_null_embedding(spark, clustered):
     assert _train_kmeans(df.unionByName(null_row), k=N_CENTERS, iters=3) == (
         _train_kmeans(df, k=N_CENTERS, iters=3)
     )
+
+
+def test_centroid_literal_matches_nested_lit(spark):
+    """The one-expression centroid literal carries the same values,
+    type and nullability as a nested ``F.lit`` of the same matrix."""
+    cents = [
+        [-3.0, 0.0, 1.0e20],
+        [-0.0, 65536.0, -4.5e15],
+        [1.0e-07, -123456789.0, 2.0**52 + 1],
+    ]
+    out = spark.range(1).select(
+        _cents_col(cents).alias("expr"), F.lit(cents).alias("lit")
+    )
+    expr_f, lit_f = out.schema.fields
+    assert expr_f.dataType == lit_f.dataType == T.ArrayType(
+        T.ArrayType(T.DoubleType(), False), False
+    )
+    assert expr_f.nullable == lit_f.nullable
+    row = out.first()
+    assert row["expr"] == row["lit"] == cents

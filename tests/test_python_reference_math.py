@@ -1181,6 +1181,19 @@ def test_dbscan_grid_job_count(spark, sf_dir, count_jobs):
     assert 0 < jobs <= DBSCAN_JOBS_MAX, f"{jobs} jobs, recorded {DBSCAN_JOBS_MAX}"
 
 
+def test_dbscan_grid_reads_kernel_output_once(spark, sf_dir):
+    """The executed plan holds one component kernel and two events
+    scans (the point projection feeds the cell aggregate and the
+    neighbour probe): a query that joins the kernel output more than
+    once re-plans the scan, distinct and kernel under every join."""
+    from smart_city_data_pipeline_spark.operators.traffic import dbscan_grid
+
+    plan = dbscan_grid(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "events.parquet" in ln]
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert len(scans) == 2, plan
+
+
 def test_dbscan_grid_planted_clusters(spark, tmp_path):
     """Planted fleet: two adjacent dense cells merge into one
     cluster, a neighbor point is border, a far point is noise."""

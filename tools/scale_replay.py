@@ -35,7 +35,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -184,6 +183,7 @@ def main() -> None:
     keys = sys.argv[2:] or DEFAULT_KEYS
     build_scale_dir()
 
+    from bench import run_key, warm_up
     from smart_city_data_pipeline_spark.session import get_spark
 
     import __spark_entry__ as e
@@ -191,24 +191,11 @@ def main() -> None:
     spark = get_spark("scale-replay")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
-    qs["road_type_analytics"](spark, SF1).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    for _ in range(2):
-        qs["frames_features_bmp"](spark, SF1).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
+    warm_up(spark, qs, SF1)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     def best_of(fn, sf_dir):
-        best = float("inf")
-        for _ in range(runs):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        return run_key(spark, fn, sf_dir, runs)[0]
 
     import math
 
