@@ -919,7 +919,8 @@ def dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # The own-cell label makes a core point, else the smallest
-    # neighbouring label a border point, else noise (-1).
+    # neighbouring label a border point, else noise (-1). CASE rather
+    # than coalesce keeps ``cluster_id`` nullable, as the union was.
     own = (F.col("o.dx") == 0) & (F.col("o.dy") == 0)
     probed = pts.select("sensor_id", "cx", "cy", F.explode(offsets).alias("o")).select(
         "sensor_id",

@@ -194,15 +194,12 @@ def main() -> None:
     warm_up(spark, qs, SF1)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-    def best_of(fn, sf_dir):
-        return run_key(spark, fn, sf_dir, runs)[0]
-
     import math
 
     table = {}
     for k in keys:
-        t1 = best_of(qs[k], SF1)
-        t10 = best_of(qs[k], SCALE_DIR)
+        t1 = run_key(spark, qs[k], SF1, runs)[0]
+        t10 = run_key(spark, qs[k], SCALE_DIR, runs)[0]
         alpha = math.log(t10 / t1) / math.log(REPLICAS)
         table[k] = {
             "t_1x_sec": round(t1, 3),
