@@ -111,16 +111,19 @@ def _tail_queries(tail: str) -> dict:
     return {k: float(v) for k, v in re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.]*)', head)}
 
 
-def _prev_bench() -> tuple[str, dict] | None:
+def _prev_bench(cpus: int) -> tuple[str, dict] | None:
     """Round-over-round noise guard: the newest PRIOR round's
-    BENCH_r*.json and its per-query timings. The newest file on disk
-    can be THIS round's own partial artifact (the driver creates it
-    before bench finishes — round 3 compared against itself). The
-    current round number comes from PROGRESS.jsonl, so the current
-    round's artifact is excluded BY NAME (a 2-hour mtime heuristic
-    broke on 3-hour rounds); the mtime check remains only as a
-    fallback when PROGRESS.jsonl is absent. Candidates that don't parse
-    to a non-empty queries dict are skipped either way."""
+    BENCH_r*.json measured on ``cpus`` Spark cores, and its per-query
+    timings. A record of another core count, or of none, is no
+    baseline: a 4-core sweep reads slower than an 8-core one on every
+    key. The newest file on disk can be THIS round's own partial
+    artifact (it exists before bench finishes — round 3 compared
+    against itself). The current round number comes from
+    PROGRESS.jsonl, so the current round's artifact is excluded BY
+    NAME (a 2-hour mtime heuristic broke on 3-hour rounds); the mtime
+    check remains only as a fallback when PROGRESS.jsonl is absent.
+    Candidates that don't parse to a non-empty queries dict are
+    skipped either way."""
     cur_round = _current_round()
     parseable = []
     for p in sorted(glob.glob(os.path.join(HERE, "BENCH_r*.json")), reverse=True):
@@ -129,6 +132,8 @@ def _prev_bench() -> tuple[str, dict] | None:
         try:
             with open(p) as f:
                 data = json.load(f)
+            if data.get("cpus") != cpus:
+                continue
             parsed = data.get("parsed")
             prev_q = parsed.get("queries") if isinstance(parsed, dict) else None
             if not prev_q:
@@ -226,7 +231,8 @@ def run(spark, sf_dir: str, argv: list[str], record: str = RECORD) -> dict:
                 f.write(plan)
 
     prev_name, deltas, regressions, retried = None, {}, {}, {}
-    prev = _prev_bench()
+    cpus = spark.sparkContext.defaultParallelism
+    prev = _prev_bench(cpus)
     if prev is not None:
         prev_name, prev_q = prev
         deltas = {k: round(v / prev_q[k], 2) for k, v in timings.items() if prev_q.get(k)}
@@ -265,6 +271,7 @@ def run(spark, sf_dir: str, argv: list[str], record: str = RECORD) -> dict:
         "deltas_vs_prev": deltas,
         "regressions_gt_1p5x": regressions,
         "transient_retries": retried,
+        "cpus": cpus,
         "unit": "sec",
         "sf": float(sf),
         "metric": "total_query_wall_seconds",

@@ -5,6 +5,12 @@ process may run on); the same configs are what we would ship to a
 1000-executor cluster, with ``spark.sql.shuffle.partitions`` raised
 proportionally to total cores (rule of thumb: 2-3x total executor
 cores; AQE coalesces the excess).
+
+An idle streaming query re-lists its source every
+``spark.sql.streaming.pollingDelay`` (Spark's default: 10 ms). The
+session sets 100 ms: an idle live query over a one-file directory at
+``local[2]`` on a 4-vCPU VM burned 4.1-4.5 CPU-s per 10 s at 10 ms and
+1.1-1.4 CPU-s at 100 ms (a session with no query: under 0.1).
 """
 
 from __future__ import annotations
@@ -35,5 +41,9 @@ def get_spark(app_name: str = "smart-city-spark", shuffle_partitions: int | None
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # The delay applies only after a trigger that found no new data;
+        # a backlogged stream never sleeps, so freshness loses at most
+        # 100 ms. A processingTime trigger would delay every batch.
+        .config("spark.sql.streaming.pollingDelay", "100ms")
     )
     return builder.getOrCreate()

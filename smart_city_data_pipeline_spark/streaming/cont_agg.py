@@ -85,10 +85,13 @@ def merge_partials_into_lake(
     """Generic idempotent, partition-scoped read-merge-swap of one
     batch's partials into a rollup lake partitioned by
     ``partition_col`` (a date or string column of ``part``). ``part``
-    must carry ``last_batch_id``; ``merge_aggs`` are the monoid merges
-    applied on ``groupBy(keys)`` over current ∪ partials and must
-    include ``F.max("last_batch_id")``. Shared by the minute rollup and
-    the incremental top-k totals (streaming/topk.py).
+    must carry ``last_batch_id`` and its partition values as the lake
+    reads them back (NULL, never ``""``, for the default partition;
+    otherwise the two group apart and a key appears twice);
+    ``merge_aggs`` are the monoid merges applied on ``groupBy(keys)``
+    over current ∪ partials and must include ``F.max("last_batch_id")``.
+    Shared by the minute rollup and the incremental top-k totals
+    (streaming/topk.py).
 
     One small job lists the partitions the partials touch (skipped
     while the lake holds no partition yet); only those directories are

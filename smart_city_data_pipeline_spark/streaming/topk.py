@@ -19,7 +19,9 @@ read-merge-swap as the continuous minute aggregate, shared via
 :func:`cont_agg.merge_partials_into_lake`, including the per-partition
 batch-id high-water mark for crash-replay idempotency). As in any
 Hive-style partitioned lake, an empty-string zone is stored in the
-default partition and reads back as NULL.
+default partition and reads back as NULL, so the partials map it to
+NULL before they group: a sensor's ``""`` and NULL events then merge
+into one row, batch after batch.
 
 The batch twin is ``operators/timeseries.py top_sensors_per_zone``
 (full oracle in the driver gate); the pytest chain asserts
@@ -44,9 +46,10 @@ SENSOR_KEYS = ("zone", "sensor_id")
 
 
 def _sensor_partials(df: DataFrame) -> DataFrame:
-    """Per-(zone, sensor) partial totals of one micro-batch."""
+    """Per-(zone, sensor) partial totals of one micro-batch, zone as
+    the lake reads it back (``""`` is NULL)."""
     return df.groupBy(
-        F.col("event_type").alias("zone"),
+        F.nullif(F.col("event_type"), F.lit("")).alias("zone"),
         F.col("user_id").alias("sensor_id"),
     ).agg(
         F.sum(F.col("value").cast("decimal(18,2)"))

@@ -1,7 +1,7 @@
 """bench.py's harness on the test lake: the per-key function's wall and
 layer record, a job guard read from that record, the plan dump that
-reuses the last timed DataFrame, and a ``--keys`` run that leaves the
-record file alone."""
+reuses the last timed DataFrame, a ``--keys`` run that leaves the
+record file alone, and the prior-round lookup's core-count match."""
 
 from __future__ import annotations
 
@@ -90,3 +90,23 @@ def test_keys_run_plans_and_record(spark, sf_dir, tmp_path, monkeypatch, capsys)
     printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert set(printed["queries"]) == {probe}
     assert set(printed["layers"][probe]) == LAYER_FIELDS
+
+
+def test_prev_bench_matches_core_count(tmp_path, monkeypatch):
+    """The prior-round baseline is the newest earlier record measured
+    on as many cores; ``BENCH_r12_c8.json`` sorts ahead of
+    ``BENCH_r12.json`` but is no baseline for a 32-core run, and a
+    4-core run has none."""
+    (tmp_path / "PROGRESS.jsonl").write_text(json.dumps({"round": 13}) + "\n")
+    for name, cpus, wall in (
+        ("BENCH_r11.json", 32, 1.0),
+        ("BENCH_r12.json", 32, 2.0),
+        ("BENCH_r12_c8.json", 8, 3.0),
+        ("BENCH_r13.json", 32, 4.0),  # this round's own artifact
+    ):
+        record = {"cpus": cpus, "parsed": {"queries": {"k": wall}}}
+        (tmp_path / name).write_text(json.dumps(record))
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    assert bench._prev_bench(32) == ("BENCH_r12.json", {"k": 2.0})
+    assert bench._prev_bench(8) == ("BENCH_r12_c8.json", {"k": 3.0})
+    assert bench._prev_bench(4) is None

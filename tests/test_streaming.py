@@ -20,6 +20,11 @@ from smart_city_data_pipeline_spark.streaming.windowed import (
     windowed_zone_counts,
 )
 
+# Jobs one rollup merge into an existing lake may run: two Spark
+# actions before the write and the write itself, which AQE splits into
+# a job per stage.
+MERGE_JOBS_MAX = 7
+
 
 def _events_stream(spark, sf_dir, tmp_path):
     """Materialize events as a parquet dir and open it as a file stream."""
@@ -329,6 +334,67 @@ def test_minute_rollup_replay_after_partial_crash(spark, sf_dir, tmp_path, monke
     assert "day" not in read_minute_rollup(spark, lake).columns
 
 
+def test_rollup_merge_jobs(spark, sf_dir, tmp_path, count_jobs):
+    """One merge into an existing lake runs at most MERGE_JOBS_MAX
+    jobs: the touched-partition probe, the high-water check and the
+    write."""
+    from smart_city_data_pipeline_spark.streaming.cont_agg import refresh_minute_rollup
+
+    ev = table(spark, sf_dir, "events")
+    lake = str(tmp_path / "rollup")
+    refresh_minute_rollup(spark, lake, ev.filter(F.col("event_id") % 2 == 0), 0)
+    batch = ev.filter(F.col("event_id") % 2 == 1)  # the same day partitions
+    jobs = count_jobs(lambda: refresh_minute_rollup(spark, lake, batch, 1))
+    assert 0 < jobs <= MERGE_JOBS_MAX
+
+
+def test_rollup_null_day_partition_replay(spark, sf_dir, tmp_path):
+    """Events with NULL ``ts`` land in ``day=__HIVE_DEFAULT_PARTITION__``.
+    A second batch merges into that partition (its NULL partition value
+    must count as touched, or the swap would drop batch 0's NULL rows),
+    and replaying it adds nothing."""
+    import os
+
+    from smart_city_data_pipeline_spark.streaming.cont_agg import (
+        _minute_partials,
+        refresh_minute_rollup,
+    )
+
+    ev = table(spark, sf_dir, "events").withColumn(
+        "ts", F.when(F.col("event_id") % 5 != 0, F.col("ts"))
+    )
+    lake = str(tmp_path / "rollup")
+    refresh_minute_rollup(spark, lake, ev.filter(F.col("event_id") % 2 == 0), 0)
+    assert "day=__HIVE_DEFAULT_PARTITION__" in os.listdir(lake)
+    cols = ["zone", "minute", "total_value", "n_events", "peak_value"]
+    want = sorted(map(tuple, _minute_partials(ev).collect()), key=str)
+    batch = ev.filter(F.col("event_id") % 2 == 1)
+    for _ in range(2):  # the merge, then its replay
+        refresh_minute_rollup(spark, lake, batch, 1)
+        got = spark.read.parquet(lake).select(*cols).collect()
+        assert sorted(map(tuple, got), key=str) == want
+
+
+def test_live_stream_idle_poll_delay(spark, tmp_path):
+    """A live (not availableNow) query on a ``get_spark`` session waits
+    at least 100 ms between polls of an idle source."""
+    from smart_city_data_pipeline_spark.streaming.warehouse_sink import stream_to_warehouse
+
+    src = str(tmp_path / "src")
+    spark.range(1).write.parquet(src)
+    q = stream_to_warehouse(
+        spark.readStream.schema("id long").parquet(src),
+        lambda df, bid: None,
+        str(tmp_path / "ckpt"),
+        available_now=False,
+    )
+    try:
+        conf = q._jsq.streamingQuery().sparkSessionForStream().sessionState().conf()
+        assert conf.streamingPollingDelay() >= 100
+    finally:
+        q.stop()
+
+
 def test_session_windows_match_batch(spark, sf_dir, tmp_path):
     """Complete-mode drain of session_window == the batch formulation,
     session for session (engine-merged gap windows)."""
@@ -429,6 +495,24 @@ def test_continuous_top_sensors_incremental(spark, sf_dir, tmp_path):
     before = sorted(map(tuple, spark.read.parquet(lake).collect()))
     refresh_sensor_totals(spark, lake, ev, 0)
     assert sorted(map(tuple, spark.read.parquet(lake).collect())) == before
+
+
+def test_top_sensors_empty_zone_ranks_once(spark, tmp_path):
+    """An empty-string zone is stored in the default partition and
+    reads back as NULL; two batches of it must merge into one row per
+    sensor, not one row per batch."""
+    from smart_city_data_pipeline_spark.streaming.topk import (
+        read_top_sensors,
+        refresh_sensor_totals,
+    )
+
+    lake = str(tmp_path / "sensor_totals")
+    schema = "user_id long, event_type string, value double"
+    for bid, value in enumerate((1.0, 4.0)):
+        batch = spark.createDataFrame([(7, "", value)], schema)
+        refresh_sensor_totals(spark, lake, batch, bid)
+    got = [tuple(r) for r in read_top_sensors(spark, lake).collect()]
+    assert got == [(None, 1, 7, 5.0)]
 
 
 def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
