@@ -122,9 +122,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Fixed-round definitions, not fixpoint caps: ANN_KMEANS_ITERS,
-# PCA_ITERS, BFS_MAX_LEVEL, LP_ROUNDS, PR_ROUNDS and HITS_ROUNDS each
-# define their algorithm by a round count that both engines replay, so
-# stopping there is the result, not a loop cut short.
+# PCA_ITERS, BFS_MAX_LEVEL, LP_ROUNDS, PR_ROUNDS, HITS_ROUNDS and the
+# tokenizer trainers' BPE_TRAIN_ITERS, WP_TRAIN_ITERS and ULM_EM_ITERS
+# (textops) each define their algorithm by a round count that both
+# engines replay, so stopping there is the result, not a loop cut
+# short.
 ANN_KMEANS_K = 16
 ANN_KMEANS_ITERS = 2
 ANN_KMEANS_NPROBE = 2

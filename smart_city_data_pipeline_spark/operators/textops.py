@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smart_city_data_pipeline_spark.catalog import release_checkpoint, table
-from smart_city_data_pipeline_spark.functions.rounding import pround, pround_sql
+from smart_city_data_pipeline_spark.functions.rounding import pround, pround_py, pround_sql
 from smart_city_data_pipeline_spark.functions import text as T
 
 
@@ -1327,41 +1327,32 @@ def bpe_pair_counts_frame(symdf: DataFrame) -> DataFrame:
     )
 
 
-def bpe_apply_merge(symdf: DataFrame, a: str, b: str) -> DataFrame:
-    """One BPE merge: rewrite every symbol sequence replacing adjacent
-    ``(a, b)`` with the fused symbol, leftmost-first (after a fuse the
-    new symbol can't chain into another ``a``·``b`` overlap — the
-    greedy rule reference BPE uses). An ``aggregate`` fold rebuilds
-    the array JVM-side; cost is per-word-length over the DISTINCT word
-    vocabulary, not the corpus."""
-    fused = a + b
-    step = lambda acc, x: F.when(  # noqa: E731
-        (F.size(acc) > 0)
-        & (F.element_at(acc, -1) == F.lit(a))
-        & (x == F.lit(b)),
-        F.concat(
-            F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(fused))
-        ),
-    ).otherwise(F.concat(acc, F.array(x)))
-    return symdf.withColumn(
-        "syms",
-        F.aggregate(
-            F.col("syms"), F.array().cast("array<string>"), step
-        ),
-    )
-
-
-def bpe_word_symbols(docs: DataFrame) -> DataFrame:
-    """Distinct-word symbol table: lowercased whitespace words with
-    corpus frequencies, each split to its character sequence — BPE
-    training's working set. Counting over the distinct VOCABULARY
-    (weighted by frequency) instead of raw tokens is the classic
-    Sennrich trick: the explode is vocab-sized, not corpus-sized."""
+def _word_counts(docs: DataFrame) -> DataFrame:
+    """Distinct lowercased whitespace words ``w`` with their corpus
+    frequencies ``wn``: the working set of every tokenizer trainer.
+    Counting over the distinct VOCABULARY (weighted by frequency)
+    instead of raw tokens is the classic Sennrich trick: later passes
+    are vocab-sized, not corpus-sized."""
     words = docs.select(
         F.explode(T.ws_tokens(F.lower(F.col("text")))).alias("w")
     ).filter(F.col("w") != "")
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("wn"))
-    return wc.select(F.split("w", "").alias("syms"), "wn")
+    return words.groupBy("w").agg(F.count(F.lit(1)).alias("wn"))
+
+
+def _per_vocab(words: DataFrame, kernel, schema: str) -> DataFrame:
+    """The distinct-word table ``(w, wn)`` through one
+    ``groupBy().applyInPandas`` group: ``kernel(vocab)`` maps the
+    ``{word: frequency}`` dict to the output rows. Bound: the
+    distinct-word table must fit one Python worker; the generator
+    draws every word from a fixed list, so it holds 31 words at every
+    scale factor."""
+
+    def run(pdf):
+        import pandas as pd
+
+        return pd.DataFrame(kernel(dict(zip(pdf["w"].tolist(), pdf["wn"].tolist()))))
+
+    return words.groupBy().applyInPandas(run, schema)
 
 
 def bpe_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1377,7 +1368,9 @@ def bpe_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈ charset², hundreds of rows), never row count.
     """
     docs = table(spark, sf_dir, "documents")
-    counts = bpe_pair_counts_frame(bpe_word_symbols(docs))
+    counts = bpe_pair_counts_frame(
+        _word_counts(docs).select(F.split("w", "").alias("syms"), "wn")
+    )
     w = Window.orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
     return (
         counts.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -1515,6 +1508,46 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_ITERS = 6  # full training iterations for bpe_train_merges
 
 
+def _learn_merges(vocab: dict, iters: int, pick) -> tuple[list, dict]:
+    """``iters`` merge rounds over the distinct-word table ``vocab``
+    (``{word: frequency}``), the loop of Sennrich et al. 2016: count
+    the frequency-weighted adjacent symbol pairs (``"a b"``) and
+    symbols, let ``pick(pairs, units)`` choose a pair and report it as
+    a row whose first field is the pair, fuse it in every word
+    leftmost-greedy (a fused symbol never chains into a second
+    overlapping match in the same round) and repeat. Returns the rows,
+    each led by its 1-based round, and each word's final symbols."""
+    seqs = {w: list(w) for w in vocab}
+    rows = []
+    for it in range(1, iters + 1):
+        pairs: dict = {}
+        units: dict = {}
+        for w, seq in seqs.items():
+            n = vocab[w]
+            for x in seq:
+                units[x] = units.get(x, 0) + n
+            for x, y in zip(seq, seq[1:]):
+                pair = f"{x} {y}"
+                pairs[pair] = pairs.get(pair, 0) + n
+        row = pick(pairs, units)
+        rows.append((it, *row))
+        a, b = row[0].split(" ")
+        for seq in seqs.values():
+            out: list = []
+            for x in seq:
+                if out and out[-1] == a and x == b:
+                    out[-1] = a + b
+                else:
+                    out.append(x)
+            seq[:] = out
+    return rows, seqs
+
+
+def _bpe_pick(pairs: dict, _units: dict) -> tuple:
+    """BPE's pick: the most frequent pair, ties to the smaller pair."""
+    return min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING, end to end for ``BPE_TRAIN_ITERS``
     iterations (Sennrich et al. 2016's actual loop, not just the first
@@ -1523,45 +1556,24 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fuse it everywhere (leftmost-greedy) → repeat. Emits the learned
     merge table — the artifact a tokenizer ships.
 
-    Scale shape: each iteration is one vocab-sized keyed count plus a
-    1-ROW driver collect (the argmax pair — bounded, the same posture
-    as the k-means Lloyd loop); the merge rewrite is a JVM-side
-    ``aggregate`` fold over the DISTINCT vocabulary, never the corpus.
+    Scale shape: one lazy plan, the word count (one keyed count over
+    the corpus explode) and :func:`_learn_merges` over the whole
+    distinct-word table in one :func:`_per_vocab` group. Bound: the
+    distinct-word table fits one Python worker (31 words today); the
+    rounds never touch the corpus.
     Oracle: the DuckDB twin unrolls the same six stages; the merge
     rewrite uses a bracket-delimited symbol string (``[a][b]`` →
     ``[ab]``) whose sequential left-to-right ``replace`` provably
-    equals the greedy fold — each symbol owns its brackets, so
+    equals the greedy fuse — each symbol owns its brackets, so
     adjacent matches never share characters (the ``|``-separator
     encoding fails exactly there) and a fused symbol can never be the
-    left element of a later match in the same pass (mirroring the
-    fold, where fused ≠ left unless b were empty).
+    left element of a later match in the same pass (fused ≠ left
+    unless b were empty).
     """
-    docs = table(spark, sf_dir, "documents")
-    sym = bpe_word_symbols(docs)
-    rows = []
-    for it in range(1, BPE_TRAIN_ITERS + 1):
-        # checkpoint the (vocab-sized) symbol table: without it every
-        # iteration's action re-scans the CORPUS through the whole
-        # merge lineage — 6 full scans instead of one. localCheckpoint
-        # (not persist) also TRUNCATES lineage, so round k's plan
-        # optimizes one merge fold, not k stacked ones (A/B-measured on
-        # the wordpiece twin; guide §3.3). The argmax collect below
-        # materializes it, so the last round's checkpoint, which sym
-        # reads, is then freed (round 1's sym reads the corpus).
-        ckpt = sym.localCheckpoint(eager=False)
-        top = (
-            bpe_pair_counts_frame(ckpt)
-            .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )[0]
-        release_checkpoint(sym)
-        rows.append((it, top["pair"], int(top["n_pairs"])))
-        a, b = top["pair"].split(" ")
-        sym = bpe_apply_merge(ckpt, a, b)
-    release_checkpoint(sym)
-    return spark.createDataFrame(
-        rows, "iteration int, pair string, n_pairs long"
+    return _per_vocab(
+        _word_counts(table(spark, sf_dir, "documents")),
+        lambda vocab: _learn_merges(vocab, BPE_TRAIN_ITERS, _bpe_pick)[0],
+        "iteration int, pair string, n_pairs long",
     )
 
 
@@ -1574,19 +1586,19 @@ def _bpe_stages_sql(iters: int) -> tuple[str, list[str]]:
     for k in range(1, iters + 1):
         prev = f"w{k - 1}"
         stages.append(f"""
-        sy{k} AS (
+        sy{k} AS MATERIALIZED (
             SELECT string_split(substr(s, 2, len(s) - 2), '][') AS syms, wn
             FROM {prev} WHERE len(s) > 0
         ),
-        p{k} AS (
+        p{k} AS MATERIALIZED (
             SELECT syms[i] || ' ' || syms[i + 1] AS pair,
                    CAST(SUM(wn) AS BIGINT) AS n_pairs
             FROM (SELECT syms, wn, unnest(range(1, len(syms))) AS i FROM sy{k})
             GROUP BY 1
         ),
-        m{k} AS (SELECT pair, n_pairs FROM p{k}
+        m{k} AS MATERIALIZED (SELECT pair, n_pairs FROM p{k}
                  ORDER BY n_pairs DESC, pair ASC LIMIT 1),
-        w{k} AS (
+        w{k} AS MATERIALIZED (
             SELECT replace(s,
                 (SELECT '[' || replace(pair, ' ', '][') || ']' FROM m{k}),
                 (SELECT '[' || replace(pair, ' ', '') || ']' FROM m{k})) AS s,
@@ -1603,8 +1615,8 @@ def _bpe_stages_sql(iters: int) -> tuple[str, list[str]]:
                 FROM documents
             ) WHERE token <> ''
         ),
-        wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS wn FROM words GROUP BY 1),
-        w0 AS (
+        wc AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS wn FROM words GROUP BY 1),
+        w0 AS MATERIALIZED (
             SELECT array_to_string(
                        list_transform(string_split(w, ''), c -> '[' || c || ']'),
                        '') AS s,
@@ -4755,73 +4767,46 @@ ORACLES["kneser_ney_score"] = f"""
 
 def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-training loop CLOSED: retrain the ``BPE_TRAIN_ITERS``
-    merges (the bpe_train_merges loop) and then ENCODE the corpus with
-    them, reporting what the tokenizer actually bought — symbols per
-    word after merging vs characters per word before, and the share of
-    symbol positions the merge table eliminated. This is the
+    merges (the bpe_train_merges kernel) and then ENCODE the corpus
+    with them, reporting what the tokenizer actually bought — symbols
+    per word after merging vs characters per word before, and the
+    share of symbol positions the merge table eliminated. This is the
     fertility/compression readout a tokenizer team checks before
     shipping a vocab (tokenizer_fertility measures a fixed external
     vocab; this measures the one WE just trained).
 
-    Exactness: encoding applies the learned merges to the DISTINCT
-    word vocabulary (the Sennrich working set — never the corpus) via
-    the same leftmost-greedy fold training uses, so the per-word
-    symbol counts are integers weighted by exact corpus frequencies;
-    the three ratios are single final divisions. The DuckDB oracle
-    re-learns the identical merges (the unrolled bpe_train_merges
-    CTE chain) and re-encodes with the same bracket-replace identity.
+    Exactness: the training rounds already leave every DISTINCT word
+    (the Sennrich working set — never the corpus) encoded by the
+    learned merges, so the per-word symbol counts are integers
+    weighted by exact corpus frequencies; the three ratios are single
+    final divisions. The DuckDB oracle re-learns the identical merges
+    (the unrolled bpe_train_merges CTE chain) and re-encodes with the
+    same bracket-replace identity.
 
-    Shape: per iteration one vocab-sized keyed count + a 1-ROW driver
-    argmax collect (the Lloyd-loop posture); the final readout is one
-    vocab-sized aggregate collapsed to a single row."""
-    docs = table(spark, sf_dir, "documents")
-    sym0 = bpe_word_symbols(docs)
-    cur = sym0
-    for _ in range(BPE_TRAIN_ITERS):
-        # localCheckpoint: lineage-truncating round cache, released as in
-        # bpe_train_merges
-        ckpt = cur.localCheckpoint(eager=False)
-        top = (
-            bpe_pair_counts_frame(ckpt)
-            .orderBy(F.col("n_pairs").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )[0]
-        release_checkpoint(cur)
-        a, b = top["pair"].split(" ")
-        cur = bpe_apply_merge(ckpt, a, b)
-    row = (
-        cur.agg(
-            F.count(F.lit(1)).alias("vocab_words"),
-            F.sum("wn").alias("total_words"),
-            F.sum(F.col("wn") * F.size("syms")).alias("syms_after"),
-        )
-        .join(
-            F.broadcast(
-                sym0.agg(
-                    F.sum(F.col("wn") * F.size("syms")).alias("chars_before")
-                )
-            )
-        )
-        .collect()
-    )[0]
-    release_checkpoint(cur)
-    from smart_city_data_pipeline_spark.functions.rounding import pround_py
+    Shape: one lazy plan, the word count and one :func:`_per_vocab`
+    group that trains with :func:`_learn_merges` and reads the ratios
+    off its final symbols. Bound: the distinct-word table fits one
+    Python worker (31 words today)."""
 
-    tw = int(row["total_words"])
-    ca = int(row["chars_before"])
-    sa = int(row["syms_after"])
-    return spark.createDataFrame(
-        [
+    def fertility(vocab):
+        _, seqs = _learn_merges(vocab, BPE_TRAIN_ITERS, _bpe_pick)
+        tw = sum(vocab.values())
+        ca = sum(n * len(w) for w, n in vocab.items())
+        sa = sum(vocab[w] * len(seq) for w, seq in seqs.items())
+        return [
             (
                 BPE_TRAIN_ITERS,
-                int(row["vocab_words"]),
+                len(vocab),
                 tw,
                 pround_py(ca / tw),
                 pround_py(sa / tw),
                 pround_py((ca - sa) / ca),
             )
-        ],
+        ]
+
+    return _per_vocab(
+        _word_counts(table(spark, sf_dir, "documents")),
+        fertility,
         "n_merges int, vocab_words long, total_words long, "
         "chars_per_word double, symbols_per_word double, "
         "saved_share double",
@@ -5697,46 +5682,63 @@ def _ulm_viterbi(w: str, vocab: dict) -> list:
     return dp[n][1][1:-1].split("][")
 
 
-def _ulm_word_counts(docs: DataFrame) -> DataFrame:
-    """Distinct lowercased whitespace words with corpus frequencies —
-    the bounded working set (the Sennrich/BPE trick: EM walks the
-    VOCABULARY weighted by frequency, never the corpus)."""
-    words = docs.select(
-        F.explode(T.ws_tokens(F.lower(F.col("text")))).alias("w")
-    ).filter(F.col("w") != "")
-    return (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wn"))
-        .filter(F.length("w") <= ULM_MAX_WORD)
-    )
+def _ulm_counts(words: dict, vocab: dict) -> dict:
+    """One hard E-step: Viterbi-segment every word of ``words``
+    (``{word: frequency}``) under ``vocab`` and count the pieces,
+    weighted by frequency."""
+    counts: dict = {}
+    for w, wn in words.items():
+        for piece in _ulm_viterbi(w, vocab):
+            counts[piece] = counts.get(piece, 0) + wn
+    return counts
 
 
-def _ulm_estep(words: DataFrame, vocab: dict) -> dict:
-    """One E-step: Viterbi-segment the distinct-word table under
-    ``vocab`` (shipped in the task closure — piece-vocabulary-sized,
-    the Lloyd-loop broadcast posture) and return weighted piece
-    counts. The mapInPandas pass and the count aggregate are both
-    bounded by the word vocabulary, not the corpus."""
-    import pandas as pd
+def _ulm_quantize(counts: dict) -> dict:
+    """Piece scores on the integer grid: max(1, count*GRID // total)."""
+    total = sum(counts.values())
+    return {p: max(1, c * ULM_GRID // total) for p, c in counts.items()}
 
-    vb = dict(vocab)
 
-    def seg_iter(batches):
-        for pdf in batches:
-            pieces, wns = [], []
-            for w, wn in zip(pdf["w"], pdf["wn"]):
-                for piece in _ulm_viterbi(str(w), vb):
-                    pieces.append(piece)
-                    wns.append(int(wn))
-            yield pd.DataFrame({"piece": pieces, "wn": wns})
+def _ulm_top_multis(counts: dict, n: int) -> list:
+    """The ``n`` most frequent multi-char pieces as ``(piece, count)``,
+    ties to the smaller piece."""
+    return sorted(
+        ((p, c) for p, c in counts.items() if len(p) >= 2),
+        key=lambda pc: (-pc[1], pc[0]),
+    )[:n]
 
-    agg = (
-        words.mapInPandas(seg_iter, "piece string, wn long")
-        .groupBy("piece")
-        .agg(F.sum("wn").cast("long").alias("c"))
-        .collect()
-    )
-    return {r["piece"]: int(r["c"]) for r in agg}
+
+def _ulm_fit(words: dict) -> tuple[list, dict, dict]:
+    """Substring seed + ULM_EM_ITERS hard-EM rounds + the final prune
+    over the distinct-word table ``words`` (``{word: frequency}``,
+    words of at most ULM_MAX_WORD characters): returns (the kept
+    pieces, sorted single chars first, then the ULM_VOCAB_TARGET top
+    multi-char pieces; final E-step counts; final quantized vocab)."""
+    sub: dict = {}
+    for w, wn in words.items():
+        for s in range(len(w)):
+            for plen in range(1, min(ULM_MAX_PIECE, len(w) - s) + 1):
+                piece = w[s:s + plen]
+                sub[piece] = sub.get(piece, 0) + wn
+    single_chars = sorted(p for p in sub if len(p) == 1)
+    seed = dict(_ulm_top_multis(sub, ULM_SEED_N))
+    seed.update((ch, sub[ch]) for ch in single_chars)
+    vocab = _ulm_quantize(seed)
+    counts: dict = {}
+    for _ in range(ULM_EM_ITERS):
+        counts = _ulm_counts(words, vocab)
+        vocab = _ulm_quantize(counts)
+        for ch in single_chars:
+            vocab.setdefault(ch, 1)  # unused singles survive at q=1
+    kept = single_chars + [p for p, _ in _ulm_top_multis(counts, ULM_VOCAB_TARGET)]
+    return kept, counts, vocab
+
+
+def _ulm_per_vocab(spark: SparkSession, sf_dir: str, kernel, schema: str) -> DataFrame:
+    """:func:`_per_vocab` over the words ULM trains on: those of at
+    most ULM_MAX_WORD characters."""
+    words = _word_counts(table(spark, sf_dir, "documents"))
+    return _per_vocab(words.filter(F.length("w") <= ULM_MAX_WORD), kernel, schema)
 
 
 def ulm_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5748,95 +5750,24 @@ def ulm_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its final Viterbi counts and quantized scores — the artifact
     a tokenizer ships.
 
-    Scale shape: the seed is one substring explode + keyed count over
-    the distinct-word vocabulary (weighted by frequency — never the
-    corpus), topped by a distributed top-N; each EM round is one
-    vocab-bounded mapInPandas segmentation pass + one keyed count,
-    with only the piece vocabulary (≤ SEED_N + alphabet rows)
-    collected to the driver per round — the k-means Lloyd posture.
+    Scale shape: one lazy plan, the word count and :func:`_ulm_fit`
+    (seed and EM rounds) over the whole distinct-word table in one
+    :func:`_per_vocab` group. Bound: the distinct-word table fits one
+    Python worker (31 words today); the rounds never touch the
+    corpus.
     Oracle: the DuckDB twin unrolls the SAME integer-grid EM — the
     Viterbi DP is ULM_MAX_WORD chained argmax CTEs per round (HUGEINT
     scores, identical (score DESC, seg ASC) tie-break), so both
     engines learn the identical vocabulary.
     """
-    words, single_chars, counts, vocab = _ulm_fit(spark, sf_dir)
-    release_checkpoint(words)
-    multis = _ulm_pruned_multis(counts)
-    rows = [(ch, counts.get(ch, 0), vocab[ch]) for ch in single_chars]
-    rows += [(p, c, vocab[p]) for p, c in multis]
-    return spark.createDataFrame(
-        rows, "piece string, n_viterbi long, score_q long"
-    )
 
+    def learned(words):
+        kept, counts, vocab = _ulm_fit(words)
+        return [(p, counts.get(p, 0), vocab[p]) for p in kept]
 
-def _ulm_pruned_multis(counts: dict) -> list:
-    return sorted(
-        ((p, c) for p, c in counts.items() if len(p) >= 2),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[:ULM_VOCAB_TARGET]
-
-
-def _ulm_fit(spark: SparkSession, sf_dir: str):
-    """Seed + ULM_EM_ITERS hard-EM rounds (the shared training core):
-    returns (words frame, sorted single chars, final E-step counts,
-    final quantized vocab)."""
-    docs = table(spark, sf_dir, "documents")
-    # The distinct-word frequency table is the working set of EVERY
-    # later pass — the substring seed, each of the ULM_EM_ITERS
-    # mapInPandas E-steps, and the callers' encode/stats passes. Left
-    # lazy, each pass re-ran the corpus scan + token explode + count
-    # (5-6 full tokenization pipelines per query; guide §4/§7.2: ship
-    # the bounded vocabulary into the Python stages, not the corpus).
-    # Materialize once — |distinct words|-bounded, inside the query.
-    words = _ulm_word_counts(docs).localCheckpoint(eager=True)
-    subs = words.select(
-        "wn",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w")),
-                    lambda s: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(
-                                F.lit(ULM_MAX_PIECE),
-                                F.length("w") - s + F.lit(1),
-                            ),
-                        ),
-                        lambda plen: F.col("w").substr(s, plen),
-                    ),
-                )
-            )
-        ).alias("piece"),
+    return _ulm_per_vocab(
+        spark, sf_dir, learned, "piece string, n_viterbi long, score_q long"
     )
-    # cnt feeds TWO collects (seed multis, singles): checkpoint so the
-    # substring explode+count runs once, not per collect.
-    cnt = (
-        subs.groupBy("piece")
-        .agg(F.sum("wn").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    multi = (
-        cnt.filter(F.length("piece") >= 2)
-        .orderBy(F.col("c").desc(), F.col("piece").asc())
-        .limit(ULM_SEED_N)
-        .collect()
-    )
-    singles_rows = cnt.filter(F.length("piece") == 1).collect()
-    release_checkpoint(cnt)
-    seed = {r["piece"]: int(r["c"]) for r in multi}
-    seed.update({r["piece"]: int(r["c"]) for r in singles_rows})
-    single_chars = sorted(r["piece"] for r in singles_rows)
-    total = sum(seed.values())
-    vocab = {p: max(1, c * ULM_GRID // total) for p, c in seed.items()}
-    counts: dict = {}
-    for _ in range(ULM_EM_ITERS):
-        counts = _ulm_estep(words, vocab)
-        total = sum(counts.values())
-        vocab = {p: max(1, c * ULM_GRID // total) for p, c in counts.items()}
-        for ch in single_chars:
-            vocab.setdefault(ch, 1)  # unused singles survive at q=1
-    return words, single_chars, counts, vocab
 
 
 def _ulm_em_ctes() -> list:
@@ -5978,23 +5909,27 @@ ORACLES["ulm_train_vocab"] = _ulm_oracle()
 # but the pick maximizes the LIKELIHOOD GAIN count(ab) /
 # (count(a)*count(b)) instead of the raw pair count. The score is
 # quantized to the integer grid (c_ab << 20) // (c_a * c_b), computed
-# in DECIMAL(38,0)/HUGEINT on the two engines (both floor-divide
+# in Python integers / HUGEINT on the two engines (both floor-divide
 # exactly; operands bounded far below 38 digits for any real corpus),
 # with the DEFINED deterministic tie-break (score_q DESC, n_pairs
 # DESC, pair ASC) — quantization + tie order are part of the spec, so
-# Spark and the oracle learn identical merge tables.
+# the kernel and the oracle learn identical merge tables.
 WP_TRAIN_ITERS = 6
 WP_SCORE_SHIFT = 1 << 20
 
 
-def _wp_symbol_counts(symdf: DataFrame) -> DataFrame:
-    """Corpus-frequency-weighted symbol occurrence counts over the
-    weighted symbol-sequence frame — one explode + keyed sum, bounded
-    by the symbol vocabulary."""
-    return (
-        symdf.select("wn", F.explode("syms").alias("s"))
-        .groupBy("s")
-        .agg(F.sum("wn").alias("c"))
+def _wp_pick(pairs: dict, units: dict) -> tuple:
+    """WordPiece's pick: the largest quantized likelihood gain
+    ``(n_ab << 20) // (c_a * c_b)``, then the larger pair count, then
+    the smaller pair; reported as ``(pair, n_pairs, score_q)``."""
+
+    def scored(pair, n):
+        a, b = pair.split(" ")
+        return pair, n, n * WP_SCORE_SHIFT // (units[a] * units[b])
+
+    return min(
+        (scored(p, n) for p, n in pairs.items()),
+        key=lambda r: (-r[2], -r[1], r[0]),
     )
 
 
@@ -6002,62 +5937,23 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece tokenizer TRAINING for ``WP_TRAIN_ITERS`` rounds:
     count weighted adjacent pairs AND weighted symbol occurrences over
     the distinct-word vocabulary → argmax of the quantized likelihood
-    gain (c_ab << 20) // (c_a*c_b) → fuse leftmost-greedy (the shared
-    :func:`bpe_apply_merge`) → repeat. Emits the learned merge table
-    with its pair count and quantized score. Completes the tokenizer-
-    training triple next to :func:`bpe_train_merges` (count argmax)
-    and :func:`ulm_train_vocab` (EM).
+    gain (c_ab << 20) // (c_a*c_b) → fuse leftmost-greedy → repeat:
+    :func:`_learn_merges` with :func:`_wp_pick`. Emits the learned
+    merge table with its pair count and quantized score. Completes the
+    tokenizer-training triple next to :func:`bpe_train_merges` (count
+    argmax) and :func:`ulm_train_vocab` (EM).
 
-    Scale shape: each round is two vocab-bounded keyed counts, one
-    pair↔symbol-count join keyed on the symbol, and a 1-ROW driver
-    collect (the argmax — the Lloyd/BPE posture); the merge rewrite is
-    a JVM-side fold over the DISTINCT vocabulary, never the corpus.
+    Scale shape: one lazy plan, the word count and the merge rounds
+    over the whole distinct-word table in one :func:`_per_vocab`
+    group. Bound: the distinct-word table fits one Python worker (31
+    words today); the rounds never touch the corpus.
     Oracle: the DuckDB twin unrolls the same rounds over the shared
     bracket-string representation, scoring with HUGEINT floor division
-    (provably equal to Spark's DECIMAL(38,0) DIV)."""
-    docs = table(spark, sf_dir, "documents")
-    sym = bpe_word_symbols(docs)
-    rows = []
-    for it in range(1, WP_TRAIN_ITERS + 1):
-        # localCheckpoint (not persist): TRUNCATES lineage, so round k's
-        # plan starts from the materialized vocab table instead of
-        # re-optimizing k stacked merge-fold rewrites (plan-compile time
-        # grows per round under persist; guide §3.3).
-        ckpt = sym.localCheckpoint(eager=False)
-        pc = bpe_pair_counts_frame(ckpt)
-        sc = _wp_symbol_counts(ckpt)
-        parts = F.split(F.col("pair"), " ")
-        j = (
-            pc.select("pair", "n_pairs", parts[0].alias("a"), parts[1].alias("b"))
-            .join(sc.select(F.col("s").alias("a"), F.col("c").alias("ca")), "a")
-            .join(sc.select(F.col("s").alias("b"), F.col("c").alias("cb")), "b")
-        )
-        scored = j.select(
-            "pair",
-            "n_pairs",
-            F.expr(
-                f"(CAST(n_pairs AS DECIMAL(38,0)) * {WP_SCORE_SHIFT})"
-                " DIV (CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))"
-            ).alias("score_q"),
-        )
-        top = (
-            scored.orderBy(
-                F.col("score_q").desc(),
-                F.col("n_pairs").desc(),
-                F.col("pair").asc(),
-            )
-            .limit(1)
-            .collect()
-        )[0]
-        rows.append(
-            (it, top["pair"], int(top["n_pairs"]), int(top["score_q"]))
-        )
-        release_checkpoint(sym)  # as in bpe_train_merges
-        a, b = top["pair"].split(" ")
-        sym = bpe_apply_merge(ckpt, a, b)
-    release_checkpoint(sym)
-    return spark.createDataFrame(
-        rows, "iteration int, pair string, n_pairs long, score_q long"
+    (equal to Python's exact integer floor division)."""
+    return _per_vocab(
+        _word_counts(table(spark, sf_dir, "documents")),
+        lambda vocab: _learn_merges(vocab, WP_TRAIN_ITERS, _wp_pick)[0],
+        "iteration int, pair string, n_pairs long, score_q long",
     )
 
 
@@ -6139,39 +6035,35 @@ def ulm_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions the vocab eliminated, exact corpus-frequency-weighted
     integers with single final divisions.
 
-    The encode pass is one more vocab-bounded Viterbi mapInPandas over
-    the distinct-word table under the PRUNED vocab (pruned multi-char
-    pieces fall back to singles, which are never pruned). Oracle:
-    the shared unrolled EM CTE chain + a final pruned-vocab DP pass
-    (`_ulm_dp_ctes('f', 'vfin')`)."""
-    words, single_chars, counts, vocab = _ulm_fit(spark, sf_dir)
-    pruned = {ch: vocab[ch] for ch in single_chars}
-    pruned.update({p: vocab[p] for p, _ in _ulm_pruned_multis(counts)})
-    enc_counts = _ulm_estep(words, pruned)
-    pieces_after = sum(enc_counts.values())
-    stats = words.agg(
-        F.count(F.lit(1)).alias("vocab_words"),
-        F.sum("wn").alias("total_words"),
-        F.sum(F.col("wn") * F.length("w")).alias("chars_before"),
-    ).collect()[0]
-    release_checkpoint(words)
-    from smart_city_data_pipeline_spark.functions.rounding import pround_py
+    The encode pass is one more Viterbi E-step over the distinct-word
+    table under the PRUNED vocab (pruned multi-char pieces fall back
+    to singles, which are never pruned), in the same :func:`_per_vocab`
+    group as the training. Bound: the distinct-word table fits one
+    Python worker (31 words today). Oracle: the shared unrolled EM CTE
+    chain + a final pruned-vocab DP pass (`_ulm_dp_ctes('f', 'vfin')`)."""
 
-    vw = int(stats["vocab_words"])
-    tw = int(stats["total_words"])
-    cb = int(stats["chars_before"])
-    return spark.createDataFrame(
-        [
+    def fertility(words):
+        kept, _, vocab = _ulm_fit(words)
+        pruned = {p: vocab[p] for p in kept}
+        pieces_after = sum(_ulm_counts(words, pruned).values())
+        tw = sum(words.values())
+        cb = sum(wn * len(w) for w, wn in words.items())
+        return [
             (
                 ULM_EM_ITERS,
                 len(pruned),
-                vw,
+                len(words),
                 tw,
                 pround_py(cb / tw),
                 pround_py(pieces_after / tw),
                 pround_py((cb - pieces_after) / cb),
             )
-        ],
+        ]
+
+    return _ulm_per_vocab(
+        spark,
+        sf_dir,
+        fertility,
         "em_iters int, vocab_pieces long, vocab_words long, "
         "total_words long, chars_per_word double, pieces_per_word double, "
         "saved_share double",

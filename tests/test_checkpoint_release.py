@@ -7,7 +7,8 @@ from __future__ import annotations
 
 import pathlib
 
-from smart_city_data_pipeline_spark.operators import textops
+from smart_city_data_pipeline_spark.catalog import table
+from smart_city_data_pipeline_spark.operators import similarity
 from smart_city_data_pipeline_spark.operators.dedup import star_cc_labels
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "smart_city_data_pipeline_spark"
@@ -29,11 +30,13 @@ def _foreign_checkpoint_on_first_call(spark, monkeypatch, owner, name):
     return made
 
 
-def test_bpe_loop_keeps_foreign_checkpoint(spark, sf_dir, monkeypatch):
+def test_pagerank_loop_keeps_foreign_checkpoint(spark, sf_dir, monkeypatch):
+    # the first release frees round 0's state, inside the round loop
     made = _foreign_checkpoint_on_first_call(
-        spark, monkeypatch, textops, "bpe_pair_counts_frame"
+        spark, monkeypatch, similarity, "release_checkpoint"
     )
-    assert textops.bpe_train_merges(spark, sf_dir).count() == textops.BPE_TRAIN_ITERS
+    n_nodes = table(spark, sf_dir, "embeddings").count()
+    assert similarity.knn_pagerank(spark, sf_dir).count() == n_nodes
     assert made[0].count() == 1000
 
 

@@ -286,9 +286,18 @@ def test_floatsum_lint_catches_planted_violation(spark):
 # those keys are allowed with the SAME per-key bound justification;
 # anything new must partition, switch idioms, or be justified in
 # SINGLE_PARTITION_EXTRA with its input bound.
+_VOCAB_BOUND = (
+    "one vocabulary-kernel group over the distinct-word table, 31 rows"
+    " from the generator's fixed word list at every scale factor"
+)
 SINGLE_PARTITION_EXTRA: dict[str, str] = {
     "dbscan_grid": "one component-kernel group over the dense-cell table,"
     " at most (10000/DBSCAN_CELL)² = 400 cells",
+    "bpe_train_merges": _VOCAB_BOUND,
+    "bpe_encode_fertility": _VOCAB_BOUND,
+    "wordpiece_train_merges": _VOCAB_BOUND,
+    "ulm_train_vocab": _VOCAB_BOUND,
+    "ulm_encode_fertility": _VOCAB_BOUND,
 }
 
 
