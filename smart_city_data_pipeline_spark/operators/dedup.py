@@ -534,10 +534,9 @@ NEARDUP_CELL_CAP = 20_000
 # it) — removed in r12 (the r11 gaming-check finding).
 
 
-def _label_counts(spark: SparkSession, sf_dir: str) -> dict:
+def _label_counts(emb: DataFrame) -> dict:
     rows = (
-        table(spark, sf_dir, "embeddings")
-        .groupBy("label")
+        emb.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
@@ -565,7 +564,10 @@ def embedding_neardup(
     Norms are precomputed per vector (narrow), so each candidate pair
     costs one dot product instead of three array folds. Candidate pairs
     are unique BY CONSTRUCTION (first-shared-band emission — see the
-    inline comment), so there is no pair-dedup shuffle at all.
+    inline comment), so there is no pair-dedup shuffle at all. A pair
+    whose norm product is 0 has a NULL cosine and is not emitted.
+    ``similarity._label_edges`` computes the same edges for one label
+    without Spark; the per-label graph keys build their graphs with it.
 
     The per-label counts are BOUNDED BY LABEL CARDINALITY (one row per
     label — a fixed class vocabulary, not a function of corpus size),
@@ -586,8 +588,9 @@ def embedding_neardup(
     guard — the same snapshot drives both forms, and the forced-cap
     pytest exercises the banded plan.
     """
-    cnts = _label_counts(spark, sf_dir)
-    emb = spread(table(spark, sf_dir, "embeddings"), "vec_id").select(
+    raw = table(spark, sf_dir, "embeddings")
+    cnts = _label_counts(raw)
+    emb = spread(raw, "vec_id").select(
         "vec_id",
         "label",
         "embedding",
@@ -627,7 +630,11 @@ def embedding_neardup(
     )
     a = blocked.alias("a")
     b = blocked.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (F.col("a.nrm") * F.col("b.nrm"))
+    # A zero norm makes the cosine NULL, as DuckDB's division by zero
+    # does; a plain ANSI division would raise.
+    cos = F.try_divide(
+        dot(F.col("a.embedding"), F.col("b.embedding")), F.col("a.nrm") * F.col("b.nrm")
+    )
     return (
         a.join(
             b,

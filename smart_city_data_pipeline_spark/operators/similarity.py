@@ -28,6 +28,12 @@ from smart_city_data_pipeline_spark.functions.vector import (
     dot_sql,
     norm,
 )
+from smart_city_data_pipeline_spark.operators.dedup import (
+    _SRP_PLANES,
+    COSINE_NEARDUP_THRESHOLD,
+    NEARDUP_CELL_CAP,
+    SRP_DIM,
+)
 
 N_PROBES = 5  # vec_id < 5 are the query vectors
 TOP_K = 5
@@ -1874,10 +1880,6 @@ ORACLES["ann_recall_report"] = _ann_recall_oracle_sql()
 
 
 def _triangle_count_oracle_sql() -> str:
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        COSINE_NEARDUP_THRESHOLD,
-    )
-
     return f"""
         WITH emb AS (
             SELECT vec_id, label, embedding,
@@ -2387,12 +2389,92 @@ ORACLES["cluster_label_nmi"] = _cluster_label_nmi_oracle_sql()
 
 
 # The near-dup graph's per-label queries (k-core, BFS levels, label
-# propagation) run one pure-Python kernel per label: each label's graph
-# is small and bounded (at sf0.1, 1449 edges in 10 labels, at most 183
-# in one label), so a Spark round loop over it is all driver overhead.
-# The label vocabulary is fixed, so the groups do not multiply with the
-# data. The kernels are functions of an edge list that tests call
-# without Spark; the DuckDB oracles recompute each in SQL.
+# propagation) run one pandas kernel per label over that label's
+# embeddings: :func:`_label_edges` computes the label's near-dup edges,
+# the same edges ``dedup.embedding_neardup`` emits, and a graph kernel
+# runs on them. The blocks are labels, a fixed vocabulary, so the groups
+# do not multiply with the data: at sf0.1 the largest of the 10 labels
+# holds 218 embeddings and 183 edges, which a Spark self-join and round
+# loop would spend in driver overhead. Bound: one label's embeddings fit
+# in one Python worker. The kernels are functions of a frame or an edge
+# list that tests call without Spark; the DuckDB oracles recompute each
+# in SQL.
+
+# Pair cells per row chunk of a pairwise block, so a label's block never
+# holds more than this many doubles at once.
+_EDGE_BLOCK = 1 << 18
+
+
+def _fold(a, b):
+    """``sum_k a[..., k] * b[..., k]`` over broadcast float64 arrays as
+    ``functions.vector.dot`` folds it: ``acc = acc + x_k * y_k`` from
+    0.0, left to right, so each value is the IEEE double Spark gets."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for k in range(a.shape[-1]):
+        acc += a[..., k] * b[..., k]
+    return acc
+
+
+def _label_edges(pdf) -> list[tuple[int, int]]:
+    """One label's near-dup edges ``(u, v)``, exactly the ``(vec_a,
+    vec_b)`` pairs ``dedup.embedding_neardup`` emits for that label.
+
+    ``pdf`` holds all of the label's rows: ``vec_id``, ``embedding`` and
+    ``pairable``, which Spark computes (label, embedding and every
+    element non-NULL: pandas reads a NULL element as NaN). Pairable
+    vectors of one length form a block whose dot products and norms use
+    :func:`_fold`. A pair is an edge when ``u < v``, its norm product is
+    not 0, and its cosine is at least ``COSINE_NEARDUP_THRESHOLD`` or
+    NaN (Spark and DuckDB order NaN above every value). A label of more
+    than ``NEARDUP_CELL_CAP`` rows compares only the pairs that share
+    one of the two SRP bands (a NaN projection is bit 1), each from the
+    first band it shares, as the skew guard of ``embedding_neardup``
+    does."""
+    import numpy as np
+
+    keep = pdf["pairable"].to_numpy(dtype=bool)
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)[keep]
+    vecs = [np.asarray(e, dtype=np.float64) for e in pdf["embedding"].to_numpy()[keep]]
+    lens = [len(v) for v in vecs]
+    if len(pdf) <= NEARDUP_CELL_CAP:
+        bands = np.zeros((len(vecs), 1), dtype=np.int64)
+    else:
+        # A vector of another length has all-NULL projections: bit 0.
+        bands = np.zeros((len(vecs), 2), dtype=np.int64)
+        full = [i for i, n in enumerate(lens) if n == SRP_DIM]
+        if full:
+            proj = _fold(np.stack([vecs[i] for i in full])[:, None], np.array(_SRP_PLANES))
+            bits = (proj > 0) | np.isnan(proj)
+            weights = 1 << np.arange(8)
+            bands[full] = np.stack([bits[:, :8] @ weights, bits[:, 8:] @ weights], axis=1)
+    edges = []
+    for b in range(bands.shape[1]):
+        blocks: dict[tuple[int, int], list[int]] = {}
+        for i, key in enumerate(zip(lens, bands[:, b].tolist())):
+            blocks.setdefault(key, []).append(i)
+        for rows in blocks.values():
+            if len(rows) < 2:
+                continue
+            x = np.stack([vecs[i] for i in rows])
+            nrm = np.sqrt(_fold(x, x))
+            bid, first = ids[rows], bands[rows, 0]
+            step = max(1, _EDGE_BLOCK // len(rows))
+            for r in range(0, len(rows), step):
+                den = nrm[r : r + step, None] * nrm
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = _fold(x[r : r + step, None], x) / den
+                hit = (
+                    (bid[r : r + step, None] < bid)
+                    & (den != 0)
+                    & ~(cos < COSINE_NEARDUP_THRESHOLD)
+                )
+                if b:
+                    hit &= first[r : r + step, None] != first
+                i, j = np.nonzero(hit)
+                edges += zip(bid[r + i].tolist(), bid[j].tolist())
+    return edges
 
 
 def _adjacency(edges: list[tuple[int, int]]) -> dict[int, list[int]]:
@@ -2405,27 +2487,34 @@ def _adjacency(edges: list[tuple[int, int]]) -> dict[int, list[int]]:
     return adj
 
 
-def _per_label(spark: SparkSession, sf_dir: str, kernel, schema: str) -> DataFrame:
-    """The near-dup ``(label, u, v)`` edges through
-    ``groupBy("label").applyInPandas``: ``kernel(edges)`` maps one
-    label's edge list to its output rows, and the label leads each row.
-    Bound: one label's edge list must fit in one Python worker."""
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        embedding_neardup,
+def _label_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings with the ``pairable`` flag :func:`_label_edges`
+    reads: label, embedding and every element non-NULL."""
+    pairable = (
+        F.col("label").isNotNull()
+        & F.col("embedding").isNotNull()
+        & ~F.exists("embedding", lambda x: x.isNull())
     )
+    return table(spark, sf_dir, "embeddings").select(
+        "label", "vec_id", "embedding", pairable.alias("pairable")
+    )
+
+
+def _per_label(spark: SparkSession, sf_dir: str, kernel, schema: str) -> DataFrame:
+    """``kernel(edges)`` over each label's near-dup edges
+    (:func:`_label_edges`) through one ``groupBy("label").applyInPandas``
+    over the embeddings, read once: the label leads each output row, and
+    a label with no edges emits none. The skew guard is decided per
+    label in the kernel, from the group's size. Bound: one label's
+    embeddings fit in one Python worker."""
 
     def run(key, pdf):
         import pandas as pd
 
-        edges = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
-        return pd.DataFrame([(*key, *row) for row in kernel(edges)])
+        edges = _label_edges(pdf)
+        return pd.DataFrame([(*key, *row) for row in kernel(edges)] if edges else [])
 
-    return (
-        embedding_neardup(spark, sf_dir)
-        .select("label", F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
-        .groupBy("label")
-        .applyInPandas(run, schema)
-    )
+    return _label_embeddings(spark, sf_dir).groupBy("label").applyInPandas(run, schema)
 
 
 # k-core peeling: drop every node of degree < k until none is left. The
@@ -2465,11 +2554,13 @@ def kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     hierarchy (Seidman 1983).
 
     One lazy plan through :func:`_per_label`: each label's kernel
+    builds its near-dup edges from its embeddings (:func:`_label_edges`),
     peels its 2-core and 3-core with :func:`_core_nodes` to the true
     fixpoint and returns that label's census row. Counts are ``bigint
-    not null``: a label whose core is empty reads 0.
+    not null``: a label whose core is empty reads 0; a label with no
+    edges has no row.
 
-    Bound: one label's edge list must fit in one Python worker. A
+    Bound: one label's embeddings must fit in one Python worker. A
     vertex-centric Spark peel (Montresor et al., TPDS 2013) pays off
     only for a single graph larger than one task, and costs one driver
     round trip per peel round.
@@ -2538,10 +2629,6 @@ def _kcore_core_sql(name: str, src: str, k: int) -> str:
 
 
 def _kcore_oracle_sql() -> str:
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        COSINE_NEARDUP_THRESHOLD,
-    )
-
     return f"""
         WITH RECURSIVE emb AS (
             SELECT vec_id, label, embedding,
@@ -3099,10 +3186,11 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-deletes (long chains; compare ``kcore_decompose``'s density
     view and ``dedup_clusters``' full components).
 
-    One lazy plan through :func:`_per_label`: each label's kernel walks
-    its graph with :func:`_bfs_level_counts` and returns one row per
-    level that holds a node. Bound: one label's edge list must fit in
-    one Python worker, as for ``kcore_decompose``. The DuckDB oracle
+    One lazy plan through :func:`_per_label`: each label's kernel builds
+    its near-dup edges from its embeddings (:func:`_label_edges`), walks
+    them with :func:`_bfs_level_counts` and returns one row per level
+    that holds a node. Bound: one label's embeddings must fit in one
+    Python worker, as for ``kcore_decompose``. The DuckDB oracle
     instead enumerates walks with a depth-capped recursive CTE and
     takes MIN(level) per node — the SPEC form (exponential in depth,
     fine at the gate's scale) checking the breadth-first kernel.
@@ -3150,10 +3238,6 @@ def _bfs_census_sql(src: str) -> str:
 
 
 def _bfs_oracle_sql() -> str:
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        COSINE_NEARDUP_THRESHOLD,
-    )
-
     return f"""
         WITH RECURSIVE emb AS (
             SELECT vec_id, label, embedding,
@@ -3208,9 +3292,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     oscillation is broken by the fixed round count, identical on both
     sides). Output: per community, size and member span.
 
-    One lazy plan through :func:`_per_label`: each label's kernel runs
+    One lazy plan through :func:`_per_label`: each label's kernel builds
+    its near-dup edges from its embeddings (:func:`_label_edges`), runs
     the rounds and returns one row per community. Bound: one label's
-    edge list must fit in one Python worker, as for
+    embeddings must fit in one Python worker, as for
     ``kcore_decompose``. The oracle replays the identical rounds as a
     recursive CTE carrying (node, label) state."""
 
@@ -3267,10 +3352,6 @@ def _lp_communities_sql(src: str) -> str:
 
 
 def _lp_oracle_sql() -> str:
-    from smart_city_data_pipeline_spark.operators.dedup import (
-        COSINE_NEARDUP_THRESHOLD,
-    )
-
     return f"""
         WITH RECURSIVE emb AS (
             SELECT vec_id, label, embedding,

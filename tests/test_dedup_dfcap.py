@@ -81,6 +81,32 @@ def test_neardup_cell_cap_noop_and_banded_subset(spark, sf_dir):
     assert "band" in plan
 
 
+def test_neardup_zero_norm_vector_has_no_edges(spark, embeddings_lake):
+    """A zero embedding's cosine is NULL, as DuckDB's division by zero
+    gives, so it has no edge; an ANSI division by its zero norm raised.
+    ``triangle_count`` builds its graph from the same pairs."""
+    from smart_city_data_pipeline_spark.operators.similarity import triangle_count
+
+    lake = embeddings_lake([(1, 0, [1.0, 0.0]), (2, 0, [1.0, 0.1]), (3, 0, [0.0, 0.0])])
+    pairs = [(r["vec_a"], r["vec_b"]) for r in embedding_neardup(spark, lake).collect()]
+    assert pairs == [(1, 2)]
+    row = triangle_count(spark, lake).collect()
+    assert [(r["label"], r["n_edges"]) for r in row] == [(0, 1)]
+
+
+def test_neardup_reads_embeddings_schema_once(spark, sf_dir, count_jobs):
+    """Construct runs one schema read of the embeddings and the label
+    count collect, nothing more."""
+    from smart_city_data_pipeline_spark.catalog import table
+    from smart_city_data_pipeline_spark.operators.dedup import _label_counts
+
+    emb = []
+    schema_read = count_jobs(lambda: emb.append(table(spark, sf_dir, "embeddings")))
+    label_counts = count_jobs(lambda: _label_counts(emb[0]))
+    construct = count_jobs(lambda: embedding_neardup(spark, sf_dir))
+    assert construct == schema_read + label_counts
+
+
 def test_incremental_matches_offline_restriction(spark, sf_dir):
     """dedup_incremental(new batch vs corpus) must equal the offline
     pair list restricted to (new, existing) pairs — the two paths may

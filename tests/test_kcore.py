@@ -1,14 +1,14 @@
 """k-core peeling vs a sequential python reference: the per-label
-kernel's core-node helper without Spark, the query on hand-made edge
-frames, the oracle's fixpoint peel CTE in DuckDB, and a job-count guard
-on the query."""
+kernel's core-node helper without Spark, the query on embeddings
+planted with hand-made near-dup graphs, the oracle's fixpoint peel CTE
+in DuckDB, and a job-count guard on the query."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from smart_city_data_pipeline_spark.operators import dedup
+from smart_city_data_pipeline_spark.catalog import table
 from smart_city_data_pipeline_spark.operators.similarity import (
     _core_nodes,
     _kcore_core_sql,
@@ -16,8 +16,10 @@ from smart_city_data_pipeline_spark.operators.similarity import (
 )
 
 # Spark jobs of one kcore_decompose construct plus noop execute on the
-# test lake with the per-label kernel; a driver-side peel loop took 18.
-KCORE_JOBS_MAX = 8
+# test lake: the embeddings' schema read, the shuffle into the labels
+# and the kernel stage. Edges built by a Spark self-join took 8, and a
+# driver-side peel loop 18.
+KCORE_JOBS_MAX = 3
 
 
 def _py_peel(edges: list[tuple[int, int]], k: int) -> tuple[set[tuple[int, int]], int]:
@@ -63,12 +65,10 @@ PENDANT = [(100, 101), (100, 102), (101, 102)] + [
 ]
 
 
-def _kcore_on(spark, monkeypatch, labelled: list[tuple[int, int, int]]):
-    """``kcore_decompose`` over a hand-made ``(label, u, v)`` edge list
-    in place of the near-dup graph."""
-    frame = spark.createDataFrame(labelled, "label int, vec_a long, vec_b long")
-    monkeypatch.setattr(dedup, "embedding_neardup", lambda spark, sf_dir: frame)
-    return kcore_decompose(spark, "unused")
+def _kcore_on(spark, planted_lake, labelled: list[tuple[int, int, int]]):
+    """``kcore_decompose`` over embeddings whose near-dup graph is the
+    hand-made ``(label, u, v)`` edge list."""
+    return kcore_decompose(spark, planted_lake(labelled))
 
 
 @pytest.mark.parametrize("k", [2, 3])
@@ -98,7 +98,7 @@ def test_core3_of_core2_is_core3():
     assert _core_nodes(sorted(_core_edges(PLANTED, 2)), 3) == _core_nodes(PLANTED, 3)
 
 
-def test_pendant_chain_peels_to_fixpoint(spark, monkeypatch):
+def test_pendant_chain_peels_to_fixpoint(spark, planted_lake):
     """A chain longer than any round cap peels away on every path: the
     helper, the Spark query and the oracle's peel CTE all give the
     triangle as the 2-core and an empty 3-core."""
@@ -111,7 +111,7 @@ def test_pendant_chain_peels_to_fixpoint(spark, monkeypatch):
     labelled = [(0, u, v) for u, v in PLANTED] + [(1, u, v) for u, v in PENDANT]
     rows = {
         r["label"]: tuple(r)[1:]
-        for r in _kcore_on(spark, monkeypatch, labelled).collect()
+        for r in _kcore_on(spark, planted_lake, labelled).collect()
     }
     assert rows == {0: (11, 14, 7, 4), 1: (33, 33, 3, 0)}
 
@@ -129,13 +129,13 @@ def test_pendant_chain_peels_to_fixpoint(spark, monkeypatch):
         con.close()
 
 
-def test_bare_path_label_counts_zero_cores(spark, monkeypatch):
+def test_bare_path_label_counts_zero_cores(spark, planted_lake):
     """A label whose graph is a bare path has empty 2- and 3-cores: its
     census row reads 0, not NULL, beside a label that has both cores."""
     path = [(1, 2), (2, 3), (3, 4), (4, 5)]
     out = _kcore_on(
         spark,
-        monkeypatch,
+        planted_lake,
         [(0, u, v) for u, v in PLANTED] + [(1, u, v) for u, v in path],
     )
     rows = {r["label"]: tuple(r)[1:] for r in out.collect()}
@@ -152,13 +152,15 @@ def test_bare_path_label_counts_zero_cores(spark, monkeypatch):
 
 
 def test_kcore_job_count(spark, sf_dir, count_jobs):
-    """One construct plus execute stays within the recorded job count:
-    a driver-side peel loop would exceed it."""
-    jobs = count_jobs(
-        lambda: kcore_decompose(spark, sf_dir)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    """Construct starts no Spark job beyond reading the embeddings
+    table's schema, and construct plus execute stays within the recorded
+    job count: a driver-side collect or peel loop exceeds both."""
+    schema_read = count_jobs(lambda: table(spark, sf_dir, "embeddings"))
+    built = []
+    construct = count_jobs(lambda: built.append(kcore_decompose(spark, sf_dir)))
+    assert construct == schema_read
+    jobs = construct + count_jobs(
+        lambda: built[0].write.format("noop").mode("overwrite").save()
     )
     assert 0 < jobs <= KCORE_JOBS_MAX, f"{jobs} jobs, recorded {KCORE_JOBS_MAX}"
 
